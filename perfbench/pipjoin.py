@@ -57,20 +57,29 @@ def city_loops(seed: int) -> dict:
     return loops
 
 
-def reference_counts(pages_dir: str, loops: dict) -> dict[str, int]:
-    """Per-tile counts made outside Spark: pyarrow reads the pages text,
-    extracts the first lat/lng mention, and the exact loop-containment
-    kernel decides each point against each tile's loop."""
-    from gos2_spark.geometry import Polygon
-    from gos2_spark.kernels import predicates as PR
-    from gos2_spark.kernels import projection as PJ
-
+def page_points(pages_dir: str, path: str) -> None:
+    """Write ``<path>/latlng.npy``: the first lat/lng mention of every page
+    (radians, 2 x n), extracted outside Spark with pyarrow."""
     text = pq.read_table(pages_dir, columns=["text"]).column("text")
     m = pc.extract_regex(text, GEO_RE).drop_null()
     lat = pc.cast(pc.struct_field(m, "lat"), "float64").to_numpy()
     lng = pc.cast(pc.struct_field(m, "lng"), "float64").to_numpy()
     ok = (lat >= -90) & (lat <= 90) & (lng >= -180) & (lng <= 180)
-    lat_r, lng_r = np.radians(lat[ok]), np.radians(lng[ok])
+    os.makedirs(path, exist_ok=True)
+    np.save(os.path.join(path, "latlng.npy"),
+            np.radians(np.stack([lat[ok], lng[ok]])))
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def reference_counts(latlng: np.ndarray, loops: dict) -> dict[str, int]:
+    """Per-tile counts made outside Spark: the exact loop-containment
+    kernel decides each page point (``page_points``) against each tile's
+    loop."""
+    from gos2_spark.geometry import Polygon
+    from gos2_spark.kernels import predicates as PR
+    from gos2_spark.kernels import projection as PJ
+
+    lat_r, lng_r = latlng
     out = {}
     for name, loop in loops.items():
         b = Polygon.from_loop(loop).rect_bound()
@@ -128,6 +137,8 @@ class PipWorkload:
     """One pip layout. ``build_tiles`` and ``setup`` prepare the coverings
     and inputs; ``op`` runs one join; ``check`` compares an op's output
     with the outside-Spark count."""
+
+    setup_passes = 0
 
     def __init__(self, name: str, ctx):
         self.name = name
@@ -189,7 +200,10 @@ class PipWorkload:
         return {r["tile_id"]: r["count"] for r in rows}
 
     def prepare_check(self) -> None:
-        self.reference = reference_counts(self.pages_dir, self.loops)
+        geo = _cached(self.ctx.cache_dir, f"pagegeo{ROWS}", self.ctx.engine_key,
+                      lambda path: page_points(self.pages_dir, path))
+        latlng = np.load(os.path.join(geo, "latlng.npy"))
+        self.reference = reference_counts(latlng, self.loops)
         self.ctx.log(f"reference per-tile counts {self.reference}")
 
     def check(self, name: str, result) -> bool:

@@ -2,67 +2,68 @@
 
 One op is a query's DataFrame build (``queries()[name](spark, dir)``, where
 iterative operators run most of their jobs) plus ``.count()``. One pass
-runs every query once, in an order the seed shuffles. Each query's output
+runs every query once, in an order the seed shuffles (with the one query
+kept, the seed changes nothing). Each query's output
 is compared once per run with its DuckDB ``oracle_sql()`` twin over the
-same parquet files, the way the repository's oracle check does.
+same parquet files, with the comparison helpers of ``tools/oracle_check.py``.
+
+The input tables are byte-for-byte copies of the repository's sf0.1 test
+fixture (TESTDATA.md; seed 42) in ``perfbench/sf0.1/``: a run reads
+nothing outside its checkout. Their SHA-256 is checked before every run.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
 import os
 import random
 
-from . import regdata
+DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "sf0.1")
+# SHA-256 of the fixture's tables, as shipped with the test data.
+TABLES = {
+    "documents": "d10b0da67e5aceb465e89365781dab5c69d3c62b64a8308398c6fd3fb09bcf82",
+}
+TABLE_ROWS = {"documents": 5_000}
 
 # (query, input table). Start list: the 16 queries probed heaviest at
 # sf0.1. Trim rule, fixed before any oracle comparison: keep those whose
-# steady build + count is at most 2 s on 4 cores (median of 3 runs after
-# one warm-up, local[4], 3g driver), so a run holds two passes or more;
-# of those, keep the two that launch the most jobs while the DataFrame is
-# built (driver layer) and the one with the largest output (exchange):
-#   weighted_sssp 1.7 s (23 build jobs), knn_join_df 2.0 s (16),
-#   distance_join_pairs 1.3 s (240k output pairs).
-# Under 2 s but dropped: edit_distance_pairs 1.3 s (6 build jobs),
-# idw_loo_cv 1.7 s (2), pip_join 1.1 s (1). Over 2 s:
-# dedup_canonical_pick 2.5, semivariogram_bins 2.7, knox_spacetime 3.0,
-# nn_gfunction 4.0, component_size_dist 4.3, streaming_window_distinct
-# 4.3, cross_k_function 4.7, st_dbscan_clusters 6.8, containment_pairs
-# 7.8, hopkins_statistic 10.7.
+# steady build + count on the fixture is at most 2 s on 4 cores (median of
+# the 2nd-4th runs after a first one, local[4], 3g driver); of those, keep
+# the one that launches the most jobs while its DataFrame is built (driver
+# layer). One query only: a registry run has about 40 s of the benchmark's
+# time budget, and the first execution plus the warm-up of a second query
+# took 20 s more. Measured (steady s, build jobs, shuffle bytes written
+# per op): weighted_sssp 1.88 s, 23 jobs, 8.7 kB.
+# Under 2 s but dropped: knn_join_df 1.86 (16, 5.3 kB), idw_loo_cv 1.87
+# (2, 1.17 MB), distance_join_pairs 1.30 (1, 0.80 MB), edit_distance_pairs
+# 1.21 (6, 0.16 MB), pip_join 0.99 (1, 0.9 kB). Over 2 s:
+# dedup_canonical_pick 2.8, semivariogram_bins 3.3, nn_gfunction 3.7,
+# knox_spacetime 3.8, streaming_window_distinct 4.5, component_size_dist
+# 4.7, cross_k_function 5.4, st_dbscan_clusters 5.4, hopkins_statistic 8.7,
+# containment_pairs 8.8.
 QUERIES = (
     ("weighted_sssp", "documents"),
-    ("knn_join_df", "customer"),
-    ("distance_join_pairs", "customer"),
 )
-_TABLE_ROWS = {"customer": regdata.N_CUSTOMER, "events": regdata.N_EVENTS,
-               "documents": regdata.N_DOCS}
 
 
-def _norm(v):
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
-def _rows_close(a, b) -> bool:
-    if len(a) != len(b):
-        return False
-    for x, y in zip(a, b):
-        if isinstance(x, float) and isinstance(y, (int, float)):
-            if not math.isclose(x, float(y), rel_tol=1e-9, abs_tol=1e-9):
-                return False
-        elif isinstance(x, tuple) and isinstance(y, tuple):
-            if not _rows_close(x, y):
-                return False
-        elif x != y:
-            return False
-    return True
+def verify_tables() -> str:
+    """Raise unless every table matches its fixture checksum; return one
+    key for all of them (for caches of results computed from them)."""
+    h = hashlib.sha256()
+    for name, want in sorted(TABLES.items()):
+        with open(os.path.join(DATA_DIR, f"{name}.parquet"), "rb") as fh:
+            got = hashlib.sha256(fh.read()).hexdigest()
+        if got != want:
+            raise RuntimeError(f"{name}.parquet is not the sf0.1 fixture table")
+        h.update(got.encode())
+    return h.hexdigest()[:16]
 
 
 def compare(spark_rows: list, spark_cols: list[str], oracle_df) -> str | None:
     """None when the Spark rows equal the oracle rows (columns sorted by
     name, rows sorted, floats to 1e-9 relative), else the first reason."""
+    from tools.oracle_check import _norm, _rows_close
+
     scols = sorted(spark_cols)
     srows = [tuple(_norm(r[c]) for c in scols) for r in spark_rows]
     ocols = sorted(oracle_df.columns)
@@ -80,29 +81,31 @@ def compare(spark_rows: list, spark_cols: list[str], oracle_df) -> str | None:
 
 
 class RegistryWorkload:
+    # ``setup`` runs every query once: the first of the warm-up passes
+    setup_passes = 1
+
     def __init__(self, name: str, ctx):
         self.name = name
         self.ctx = ctx
         self.order = [q for q, _ in QUERIES]
         random.Random(ctx.seed).shuffle(self.order)
-        self.rows_per_pass = sum(_TABLE_ROWS[t] for _, t in QUERIES)
+        self.rows_per_pass = sum(TABLE_ROWS[t] for _, t in QUERIES)
 
     def build_tiles(self) -> None:
         pass
 
     def setup(self) -> None:
-        """Write the tables and run every query once with ``collect`` (its
+        """Check the tables and run every query once with ``collect`` (its
         first, slowest execution), keeping the rows for the oracle check."""
         import __spark_entry__ as entry
 
-        self.data_dir = os.path.join(self.ctx.cache_dir, "registry-sf0.1")
-        regdata.write_tables(self.data_dir)
+        self.data_key = verify_tables()
         self.queries = entry.queries()
         self.oracles = entry.oracle_sql()
         self.collected = {}
         for q in self.order:
             try:
-                df = self.queries[q](self.ctx.spark, self.data_dir)
+                df = self.queries[q](self.ctx.spark, DATA_DIR)
                 self.collected[q] = (df.collect(), df.columns)
             except Exception as e:  # noqa: BLE001 - a raise fails the check
                 self.collected[q] = e
@@ -112,18 +115,16 @@ class RegistryWorkload:
 
     def op(self, tracer, query: str) -> int:
         with tracer.span("build"):
-            df = self.queries[query](self.ctx.spark, self.data_dir)
+            df = self.queries[query](self.ctx.spark, DATA_DIR)
         with tracer.span("action"):
             return df.count()
 
     def _oracle(self, con, query: str):
-        """DuckDB result of the query's oracle, cached per (tables, SQL):
-        the slowest oracles take 15-45 s."""
+        """DuckDB result of the query's oracle, cached per (tables, SQL)."""
         import pandas as pd
 
         sql = self.oracles[query]
-        with open(regdata.__file__, "rb") as fh:
-            key = hashlib.sha1(fh.read() + sql.encode()).hexdigest()[:16]
+        key = hashlib.sha1((self.data_key + sql).encode()).hexdigest()[:16]
         path = os.path.join(self.ctx.cache_dir, "oracle", f"{query}-{key}.pkl")
         if os.path.exists(path):
             return pd.read_pickle(path)
@@ -141,8 +142,8 @@ class RegistryWorkload:
         con = duckdb.connect()
         con.execute(f"SET threads TO {self.ctx.cpus}")
         con.execute(f"SET temp_directory = '{os.environ['TMPDIR']}'")
-        for t in regdata.TABLES:
-            path = os.path.join(self.data_dir, f"{t}.parquet")
+        for t in TABLES:
+            path = os.path.join(DATA_DIR, f"{t}.parquet")
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
         self.expected: dict[str, int] = {}
         for q in self.order:

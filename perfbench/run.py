@@ -1,6 +1,6 @@
 """gos2_spark benchmark: one workload per process, one JSON result line.
 
-    python3 perfbench/run.py --workload pip_staged --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload pip_staged --seed 1 --seconds 8 --trace 0
 
 Workloads: pip_staged, pip_geoparse (perfbench/pipjoin.py) and registry_heavy
 (perfbench/registry.py). A run builds the workload's coverings, starts
@@ -33,15 +33,19 @@ CACHE = os.path.join(ROOT, ".perfbench_cache")
 # Session sizing, passed through get_spark's arguments and environment.
 DRIVER_MEM = "3g"
 SHUFFLE_PER_CPU = 2
-# Warm-up rule: passes until the last WARM_WINDOW pass times differ by at
-# most WARM_SPREAD (max/min - 1), after at least WARM_MIN_OPS ops and
-# WARM_WINDOW passes; stop after WARM_MAX_S seconds regardless. The JIT
-# keeps speeding pip ops up for about six ops.
-WARM_WINDOW, WARM_SPREAD, WARM_MIN_OPS, WARM_MAX_S = 3, 0.10, 6, 40.0
+# Warm-up rule: WARM_OPS untimed ops (whole passes) before the timed
+# window; op times fall by 30-60 % over the first five. A fixed count
+# rather than "until the last three agree within 10 %", so that every run
+# times the same stretch of the JIT's curve and spends the same set-up
+# time: that adaptive rule ended after 6 to 14 pip_geoparse ops, and the
+# op medians of ten runs spread by 18 % and their setup_s by 22 %
+# (IQR/median). Warming up for at least 20 s as well made pip_staged runs
+# 6 s longer and left their spread where it was (15 %).
+WARM_OPS = 6
 
 # The end-to-end metrics of the result line. op_s_tail is printed with its
-# percentile and n but is not one of them: a run holds 3-20 ops, too few
-# for a percentile at or above the median with ten samples beyond it.
+# percentile and n but is not one of them: an 8-s run holds 2-9 ops, too
+# few for a percentile above the median with ten samples beyond it.
 END_TO_END = ("setup_s", "rows_per_s", "op_s_p50", "pass_s", "ok_ratio",
               "peak_rss_mb")
 UNITS = {"setup_s": "s", "rows_per_s": "rows/s", "op_s_p50": "s",
@@ -74,47 +78,75 @@ def _steal_s() -> float:
 
 
 class RssSampler(threading.Thread):
-    """Peak summed RSS of this process and all its descendants."""
+    """Peak RSS of this process and all its descendants, summed, and the
+    peaks of two parts of it: the JVM alone and the Python workers the JVM
+    forks. The JVM's share is mostly its pre-touched heap (``-Xms`` equals
+    the driver memory), a constant set by the session sizing; the workers'
+    share moves with the engine's UDF batches."""
 
     def __init__(self, period: float = 1.0):
         super().__init__(daemon=True)
         self.period = period
-        self.peak = 0
+        self.peak = {"total": 0, "jvm": 0, "workers": 0}
         self._halt = threading.Event()
         self._page = os.sysconf("SC_PAGE_SIZE")
 
-    def _tree_rss(self) -> int:
+    def _rss(self, pid: int) -> int:
+        try:
+            with open(f"/proc/{pid}/statm") as fh:
+                return int(fh.read().split()[1]) * self._page
+        except (OSError, ValueError, IndexError):
+            return 0
+
+    def _sample(self) -> None:
         children: dict[int, list[int]] = {}
+        comm: dict[int, str] = {}
         for d in os.listdir("/proc"):
             if not d.isdigit():
                 continue
             try:
                 with open(f"/proc/{d}/stat") as fh:
-                    ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
+                    head, rest = fh.read().rsplit(")", 1)
+                ppid = int(rest.split()[1])
             except (OSError, ValueError, IndexError):
                 continue
             children.setdefault(ppid, []).append(int(d))
-        total, todo = 0, [os.getpid()]
+            comm[int(d)] = head.split("(", 1)[1]
+        part = {"total": 0, "jvm": 0, "workers": 0}
+        todo = [(os.getpid(), False)]
         while todo:
-            pid = todo.pop()
-            todo.extend(children.get(pid, ()))
-            try:
-                with open(f"/proc/{pid}/statm") as fh:
-                    total += int(fh.read().split()[1]) * self._page
-            except (OSError, ValueError, IndexError):
-                pass
-        return total
+            pid, under_jvm = todo.pop()
+            rss = self._rss(pid)
+            is_jvm = comm.get(pid) == "java"
+            part["total"] += rss
+            if is_jvm:
+                part["jvm"] += rss
+            elif under_jvm:
+                part["workers"] += rss
+            todo.extend((c, under_jvm or is_jvm) for c in children.get(pid, ()))
+        for k, v in part.items():
+            self.peak[k] = max(self.peak[k], v)
 
     def run(self) -> None:
         while not self._halt.is_set():
-            self.peak = max(self.peak, self._tree_rss())
+            self._sample()
             self._halt.wait(self.period)
 
-    def stop(self) -> float:
+    def stop(self) -> dict[str, float]:
+        """Peaks in MB: ``total``, ``jvm`` and ``workers``."""
         self._halt.set()
         self.join()
-        self.peak = max(self.peak, self._tree_rss())
-        return self.peak / 2**20
+        self._sample()
+        return {k: v / 2**20 for k, v in self.peak.items()}
+
+
+def _heap_peaks_mb(spark) -> dict[str, float]:
+    """Peak used bytes of each JVM heap pool since start, in MB, by pool
+    name (G1: eden, survivor, old gen)."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return {str(p.getName()): p.getPeakUsage().getUsed() / 2**20
+            for p in mf.getMemoryPoolMXBeans()
+            if str(p.getType()) == "Heap memory"}
 
 
 class Context:
@@ -228,31 +260,27 @@ def _run_pass(ops, tracer, deadline=None, done=None):
     return out
 
 
-def _warm_up(ctx, ops, notrace) -> list[float]:
-    """Untimed passes by the warm-up rule; returns their seconds."""
-    min_passes = max(WARM_WINDOW, -(-WARM_MIN_OPS // len(ops)))
+def _warm_up(ctx, ops, notrace, done: int) -> list[float]:
+    """Untimed passes by the warm-up rule, counting ``done`` passes the
+    workload's set-up already ran; returns their seconds."""
     times: list[float] = []
-    t_start = time.perf_counter()
-    while time.perf_counter() - t_start < WARM_MAX_S:
+    while (done + len(times)) * len(ops) < WARM_OPS:
         p = _run_pass(ops, notrace)
         for name, _, res in p:
             if isinstance(res, Exception):
                 ctx.log(f"warm-up {name} raised {res!r}")
         times.append(sum(t for _, t, _ in p))
-        last = times[-WARM_WINDOW:]
-        if len(times) >= min_passes and max(last) / min(last) - 1.0 <= WARM_SPREAD:
-            break
     return times
 
 
 def _tail(xs: list[float], beyond: int = 10) -> tuple[float, float] | None:
     """(value, percentile) of the highest percentile that still has at
     least ``beyond`` samples above it: the (n - beyond)-th smallest sample,
-    at percentile 100 * (n - beyond) / n. None with ``beyond`` or fewer
-    samples."""
+    at percentile 100 * (n - beyond) / n. None unless that percentile is
+    above the median, i.e. with fewer than 2 * beyond + 1 samples."""
     s = sorted(xs)
     k = len(s) - beyond
-    if k < 1:
+    if 2 * k <= len(s):
         return None
     return s[k - 1], 100.0 * k / len(s)
 
@@ -313,7 +341,8 @@ def per_layer_names() -> list[str]:
     names += [
         "exchange.shuffle_read_bytes", "exchange.shuffle_write_bytes",
         "exchange.spill_bytes", "scheduler.jobs", "scheduler.stages",
-        "scheduler.tasks", "scheduler.failed_tasks", "trace.overhead_ratio",
+        "scheduler.tasks", "scheduler.failed_tasks", "memory.jvm_rss_mb",
+        "memory.worker_rss_mb", "memory.old_gen_peak_mb", "trace.overhead_ratio",
     ]
     return names
 
@@ -326,6 +355,8 @@ def _layer_unit(name: str) -> str:
         return "s"
     if leaf.endswith("_bytes"):
         return "bytes"
+    if leaf.endswith("_mb"):
+        return "MB"
     if leaf in ("prune_ratio", "refine_yield", "overhead_ratio"):
         return "ratio"
     return "count"
@@ -415,7 +446,7 @@ def main(argv=None) -> int:
         ctx.log(f"session {session_start_s:.2f}s, inputs ready at "
                 f"{_process_age_s():.2f}s")
         ops = wl.ops()
-        warm = _warm_up(ctx, ops, notrace)
+        warm = _warm_up(ctx, ops, notrace, wl.setup_passes)
         ctx.log(f"warm-up pass seconds {[round(t, 3) for t in warm]}")
 
         setup_s = _process_age_s()
@@ -450,9 +481,14 @@ def main(argv=None) -> int:
             spans_path = os.path.join(
                 CACHE, f"spans-{args.workload}-seed{args.seed}.json")
             tracer.write(spans_path)
+        heap_mb = _heap_peaks_mb(spark)
     finally:
         _stop_session(spark)
-    peak_rss_mb = rss.stop()
+    rss_mb = rss.stop()
+    old_gen = [v for k, v in heap_mb.items() if "Old" in k]
+    layers["memory.jvm_rss_mb"] = rss_mb["jvm"]
+    layers["memory.worker_rss_mb"] = rss_mb["workers"]
+    layers["memory.old_gen_peak_mb"] = old_gen[0] if old_gen else 0.0
 
     times = [t for _, t, _, _ in timed_ops]
     attempted = len(timed_ops)
@@ -464,7 +500,7 @@ def main(argv=None) -> int:
         "op_s_p50": statistics.median(times),
         "pass_s": pass_s,
         "ok_ratio": (attempted - failed) / attempted,
-        "peak_rss_mb": peak_rss_mb,
+        "peak_rss_mb": rss_mb["total"],
     }
     ctx.log(f"session {ctx.conf}; seed {args.seed}; {attempted} ops in "
             f"{len(passes)} passes: {[round(t, 3) for t in times]}")
@@ -474,9 +510,13 @@ def main(argv=None) -> int:
     print("session: " + ", ".join(f"{k}={v}" for k, v in ctx.conf.items()))
     for k in END_TO_END:
         print(f"{k:<14} {e2e[k]:>16.6f} {UNITS[k]}")
+    print(f"peak_rss_mb parts: JVM {rss_mb['jvm']:.0f} MB (its heap is pre-touched "
+          f"to SPARK_DRIVER_MEM), Python workers {rss_mb['workers']:.0f} MB; peak "
+          "heap used by pool: " + ", ".join(f"{k} {v:.0f} MB" for k, v in heap_mb.items()))
     tail = _tail(times)
     if tail is None:
-        print(f"op_s_tail      {'none':>16} s (n={attempted}: no sample has ten beyond it)")
+        print(f"op_s_tail      {'none':>16} s (n={attempted}: no percentile above "
+              "p50 has ten samples beyond it)")
     else:
         print(f"op_s_tail      {tail[0]:>16.6f} s (p{tail[1]:.0f} of n={attempted})")
     if args.trace:
