@@ -1,23 +1,21 @@
 """Pure-numpy vectorized kernels (no Spark imports here — importable on executors).
 
-On import, OpenBLAS is pinned to ONE thread per process, unless the host
-opts out with GOS2_SPARK_NO_BLAS_PIN=1. The engine's parallelism comes
-from Spark partitions — every executor core already runs its own Python
-worker — so BLAS-level threading inside each worker is pure loss: measured
-on local[8] over the pip refine kernel, un-pinned OpenBLAS (2
-threads/worker on this build) is 4x SLOWER than pinned, because the
-kernels' skinny (N,3)x(3,M) GEMMs are memory-bound and the per-call
-fork/join sync plus spin-waiting worker threads dominate. The ctypes call
-(rather than OPENBLAS_NUM_THREADS) works even when numpy was imported
-before this module — which is always the case inside a PySpark worker,
-where pandas/pyarrow load numpy during UDF deserialization.
+On import, OpenBLAS is pinned to ONE thread per process. The engine's
+parallelism comes from Spark partitions — every executor core already
+runs its own Python worker — so BLAS-level threading inside each worker
+is pure loss: measured on local[8] over the pip refine kernel, un-pinned
+OpenBLAS (2 threads/worker on this build) is 4x SLOWER than pinned,
+because the kernels' skinny (N,3)x(3,M) GEMMs are memory-bound and the
+per-call fork/join sync plus spin-waiting worker threads dominate. The
+ctypes call (rather than OPENBLAS_NUM_THREADS) works even when numpy was
+imported before this module — which is always the case inside a PySpark
+worker, where pandas/pyarrow load numpy during UDF deserialization.
 
-The import-time default stays ON because the pin must run inside every
-executor Python worker and module import is the only hook that reliably
-fires there; a host application embedding this library next to other
-BLAS-hungry numpy work on the DRIVER can either set the env var before
-importing, or call pin_blas_threads(n) afterwards to re-raise the limit —
-the pin is reversible.
+The pin runs at import because it must run inside every executor Python
+worker and module import is the only hook that reliably fires there; a
+host application embedding this library next to other BLAS-hungry numpy
+work on the DRIVER can call pin_blas_threads(n) afterwards to re-raise the
+limit — the pin is reversible.
 """
 
 import ctypes
@@ -46,8 +44,4 @@ def pin_blas_threads(n: int = 1) -> None:
         pass
 
 
-# legacy private alias (round-1/2 name)
-_pin_blas_threads = pin_blas_threads
-
-if os.environ.get("GOS2_SPARK_NO_BLAS_PIN", "") != "1":
-    pin_blas_threads()
+pin_blas_threads()

@@ -18,14 +18,12 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-import os
-
 import numpy as np
 
 # Cells (rows x vertices) per refine slice: sized so each intermediate
 # matrix is ~128 KB (L1/L2-resident). See contains_points_in_loop docstring
-# for the measured sweep. Env-overridable for benchmarking/tuning.
-_MAX_CELLS_PER_SLICE = int(os.environ.get("GOS2_REFINE_SLICE_CELLS", "16000"))
+# for the measured sweep.
+_MAX_CELLS_PER_SLICE = 16000
 
 MAX_DET_ERROR = 0.8e-15  # 14 * 2**-54 (point.go:20)
 

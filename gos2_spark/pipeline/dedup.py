@@ -387,81 +387,6 @@ def simhash_candidates(
     )
 
 
-def simhash_candidates_safe(
-    docs: DataFrame, key_col: str = "doc_id", text_col: str = "text",
-    max_hamming: int = 3, n_blocks: int | None = None,
-    bucket_cap: int | None = 1000,
-) -> DataFrame:
-    """Recall-safe composition of the capped banded join with exact dedup —
-    the fallback ``simhash_candidates``' docstring prescribes, wired:
-
-    1. byte-identical documents collapse to their min-key representative
-       (``exact_dedup``) BEFORE banding, so a cluster of n identical docs
-       contributes ONE row per bucket instead of n — the dominant source
-       of over-full buckets in a web corpus (mirrored boilerplate pages);
-    2. the capped banded join runs on representatives only — candidate
-       volume stays O(n_tables * n_reps * cap) regardless of skew;
-    3. pairs expand back through the identity groups: every pair of
-       byte-identical docs is emitted at hamming 0, and each
-       representative-level pair (ra, rb, h) expands to all (member_a,
-       member_b, h) pairs (identical text => identical signature).
-
-    Recall is therefore cap-INDEPENDENT for identical clusters of any
-    size. Only clusters of >cap mutually-near-identical-but-UNEQUAL docs
-    remain subject to the cap (their pair set is quadratic by nature —
-    enumerate those via representatives downstream). The identity-pair
-    output is itself quadratic in group size — that is the true result
-    size, not join blowup.
-
-    Returns (key_a, key_b, hamming).
-    """
-    hashed = docs.select(
-        F.col(key_col).alias("key"), F.col(text_col).alias("_text"),
-        F.md5(F.col(text_col)).alias("content_hash"),
-    )
-    groups = hashed.groupBy("content_hash").agg(F.min("key").alias("rep"))
-    members = hashed.select("key", "content_hash").join(groups, "content_hash")
-
-    # (a) identity pairs: all pairs inside each byte-identical group
-    ma, mb = members.alias("ma"), members.alias("mb")
-    identity_pairs = (
-        ma.join(
-            mb,
-            (F.col("ma.content_hash") == F.col("mb.content_hash"))
-            & (F.col("ma.key") < F.col("mb.key")),
-        )
-        .select(
-            F.col("ma.key").alias("key_a"),
-            F.col("mb.key").alias("key_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-
-    # (b) representative-level banded candidates, then expand to members
-    reps = (
-        hashed.join(groups, "content_hash")
-        .where(F.col("key") == F.col("rep"))
-        .select(F.col("key"), F.col("_text").alias(text_col))
-    )
-    rep_pairs = simhash_candidates(
-        reps, key_col="key", text_col=text_col,
-        max_hamming=max_hamming, n_blocks=n_blocks, bucket_cap=bucket_cap,
-    )
-    ea = members.select(F.col("rep").alias("key_a"), F.col("key").alias("_ka"))
-    eb = members.select(F.col("rep").alias("key_b"), F.col("key").alias("_kb"))
-    expanded = (
-        rep_pairs.join(ea, "key_a").join(eb, "key_b")
-        .select(
-            F.least("_ka", "_kb").alias("key_a"),
-            F.greatest("_ka", "_kb").alias("key_b"),
-            F.col("hamming").cast("int").alias("hamming"),
-        )
-    )
-    return identity_pairs.unionByName(expanded).dropDuplicates(
-        ["key_a", "key_b"]
-    )
-
-
 def line_dedup(
     docs: DataFrame,
     key_col: str = "doc_id",

@@ -21,8 +21,6 @@ Scale shape (10^9 domains, 10^11 edges):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -208,7 +206,6 @@ def connected_components(
     except Exception:
         pass
     keyed_nodes = nodes.select(F.col(node_col).alias("key"))
-    contract_map = None
     if initial_labels is not None:
         # QUOTIENT pre-pass: a valid clique seeding lets the whole
         # machinery run on the quotient graph instead of merely seeding
@@ -222,11 +219,14 @@ def connected_components(
         # the original components' label sets, and min-over-labels =
         # min-over-nodes because every label is itself a member node.
         # Unseeded nodes keep their own key as label, so partial
-        # seedings remain valid.
+        # seedings remain valid. A key seeded more than once keeps its
+        # MIN label (every seed row names a clique the key belongs to, so
+        # the min is as valid as any): one lmap row per key, or each
+        # duplicate seed row would become a duplicate output row.
         lmap = mat(
             keyed_nodes.join(
-                initial_labels.select(
-                    F.col(node_col).alias("key"), F.col("label")
+                initial_labels.groupBy(F.col(node_col).alias("key")).agg(
+                    F.min("label").alias("label")
                 ),
                 "key",
                 "left",
@@ -262,63 +262,58 @@ def connected_components(
         return lmap.join(
             comps_q.select(F.col("key").alias("label"), "component"), "label"
         ).select("key", "component")
-    elif os.environ.get("GOS2_CC_CONTRACT", "1") == "1":
-        # LOCAL CONTRACTION pre-pass: one union-find sweep per partition
-        # collapses everything each partition's edges connect, and the
-        # shuffle rounds below run on the (much smaller) cross-partition
-        # remainder graph. Edges are filtered to the node universe first —
-        # the loop's inner joins did that implicitly, and the contraction
-        # must not merge through endpoints the caller excluded.
-        # ``edges_in_universe=True`` skips the two semi-joins when the
-        # caller constructed the edges from the node set itself (they would
-        # re-execute the caller's node plan against every edge).
-        if edges_in_universe:
-            sym_f = sym
-        else:
-            in_nodes_a = keyed_nodes.select(F.col("key").alias("key_a"))
-            in_nodes_b = keyed_nodes.select(F.col("key").alias("key_b"))
-            sym_f = sym.join(in_nodes_a, "key_a", "semi").join(
-                in_nodes_b, "key_b", "semi"
-            )
-        # a node whose edges straddle partitions gets one mapping row PER
-        # partition; keep the min — a single-valued mapping is all the
-        # stitching needs, because every local merge is backed by physical
-        # edges in sym and e2 relabels ALL of them (the dropped label's
-        # group stays reachable through those edges)
-        contract_map = mat(
-            _local_contract(sym_f)
-            .groupBy("key")
-            .agg(F.min("label").alias("label"))
-        )
-        ma = contract_map.select(
-            F.col("key").alias("_ka"), F.col("label").alias("_la")
-        )
-        mb = contract_map.select(
-            F.col("key").alias("_kb"), F.col("label").alias("_lb")
-        )
-        e2 = (
-            sym.join(ma, F.col("key_a") == F.col("_ka"))
-            .join(mb, F.col("key_b") == F.col("_kb"))
-            .where(F.col("_la") != F.col("_lb"))
-            .select(F.col("_la").alias("key_a"), F.col("_lb").alias("key_b"))
-            .distinct()
-        )
-        sym = mat(e2)
-        # seed labels: the distinct label set of the (checkpointed, small)
-        # contraction map. Left LAZY on purpose — round 1 references it 3x
-        # (neighbor-min / chase mapping / candidate self) but each
-        # reference is one tiny exchange over the checkpointed map, cheaper
-        # than the extra checkpoint job a mat() here costs; _apply
-        # truncates the lineage at the end of round 1 anyway.
-        labels = (
-            contract_map.select(F.col("label").alias("key"))
-            .distinct()
-            .withColumn("label", F.col("key"))
-        )
+    # LOCAL CONTRACTION pre-pass: one union-find sweep per partition
+    # collapses everything each partition's edges connect, and the
+    # shuffle rounds below run on the (much smaller) cross-partition
+    # remainder graph. Edges are filtered to the node universe first —
+    # the loop's inner joins did that implicitly, and the contraction
+    # must not merge through endpoints the caller excluded.
+    # ``edges_in_universe=True`` skips the two semi-joins when the
+    # caller constructed the edges from the node set itself (they would
+    # re-execute the caller's node plan against every edge).
+    if edges_in_universe:
+        sym_f = sym
     else:
-        labels = mat(
-            keyed_nodes.withColumn("label", F.col("key"))
+        in_nodes_a = keyed_nodes.select(F.col("key").alias("key_a"))
+        in_nodes_b = keyed_nodes.select(F.col("key").alias("key_b"))
+        sym_f = sym.join(in_nodes_a, "key_a", "semi").join(
+            in_nodes_b, "key_b", "semi"
         )
+    # a node whose edges straddle partitions gets one mapping row PER
+    # partition; keep the min — a single-valued mapping is all the
+    # stitching needs, because every local merge is backed by physical
+    # edges in sym and e2 relabels ALL of them (the dropped label's
+    # group stays reachable through those edges)
+    contract_map = mat(
+        _local_contract(sym_f)
+        .groupBy("key")
+        .agg(F.min("label").alias("label"))
+    )
+    ma = contract_map.select(
+        F.col("key").alias("_ka"), F.col("label").alias("_la")
+    )
+    mb = contract_map.select(
+        F.col("key").alias("_kb"), F.col("label").alias("_lb")
+    )
+    e2 = (
+        sym.join(ma, F.col("key_a") == F.col("_ka"))
+        .join(mb, F.col("key_b") == F.col("_kb"))
+        .where(F.col("_la") != F.col("_lb"))
+        .select(F.col("_la").alias("key_a"), F.col("_lb").alias("key_b"))
+        .distinct()
+    )
+    sym = mat(e2)
+    # seed labels: the distinct label set of the (checkpointed, small)
+    # contraction map. Left LAZY on purpose — round 1 references it 3x
+    # (neighbor-min / chase mapping / candidate self) but each
+    # reference is one tiny exchange over the checkpointed map, cheaper
+    # than the extra checkpoint job a mat() here costs; _apply
+    # truncates the lineage at the end of round 1 anyway.
+    labels = (
+        contract_map.select(F.col("label").alias("key"))
+        .distinct()
+        .withColumn("label", F.col("key"))
+    )
 
     _fuse_apply = materialize is None and (
         spark.sparkContext.getCheckpointDir() is None
@@ -348,22 +343,14 @@ def connected_components(
     # checkpointed mapping) rides each round in-plan. More in-plan
     # doubling (M^8) was measured SLOWER end-to-end: the fragment
     # broadcast below already spreads discoveries fragment-wide per
-    # round, so extra chase joins only add shuffle stages (hops=3: 7
-    # joins/round, 7.5s on the sf0.1 eps-graph; hops=1: 5.6s; the round
+    # round, so extra chase joins only add shuffle stages (3 hops: 7
+    # joins/round, 7.5s on the sf0.1 eps-graph; 1 hop: 5.6s; the round
     # count barely moves).
-    hops = int(os.environ.get("GOS2_CC_HOPS", "1"))
-
-    def _pow_mapping(m: DataFrame) -> DataFrame:
-        for _ in range(hops):
-            nxt = m.select(F.col("_lk").alias("_k2"), F.col("_ll").alias("_l2"))
-            m = (
-                m.join(nxt, m["_ll"] == nxt["_k2"], "left")
-                .select(
-                    "_lk",
-                    F.coalesce(F.col("_l2"), F.col("_ll")).alias("_ll"),
-                )
-            )
-        return m
+    def _chase_mapping(m: DataFrame) -> DataFrame:
+        nxt = m.select(F.col("_lk").alias("_k2"), F.col("_ll").alias("_l2"))
+        return m.join(nxt, m["_ll"] == nxt["_k2"], "left").select(
+            "_lk", F.coalesce(F.col("_l2"), F.col("_ll")).alias("_ll")
+        )
 
     def _one_round(cur: DataFrame, carry: tuple = ()) -> DataFrame:
         # ONE hash-to-min round, as a lazy plan over `cur` (key, label,
@@ -371,7 +358,7 @@ def connected_components(
         #   1. neighbor-min — every node sees the min label across its
         #      graph edges (the only step that moves information across
         #      the graph);
-        #   2. pointer chase — candidates jump up to 2^hops stale-pointer
+        #   2. pointer chase — candidates jump up to 2 stale-pointer
         #      steps through the in-plan composed mapping (free
         #      shortcuts, no extra materialization);
         #   3. fragment broadcast — grouping by each node's CHASED root
@@ -384,7 +371,7 @@ def connected_components(
         #      fragments merge along every boundary every round and the
         #      count of distinct labels drops geometrically (hash-to-min,
         #      Rastogi et al.).
-        mk = _pow_mapping(
+        mk = _chase_mapping(
             cur.select(F.col("key").alias("_lk"), F.col("label").alias("_ll"))
         )
         neighbor_min = (
@@ -413,27 +400,24 @@ def connected_components(
             "key", F.least(F.col("_cand"), F.col("_fmin")).alias("label"), *carry
         )
 
-    # Rounds-per-materialization stays 1: fusing two rounds into one plan
+    # One round per materialization: fusing two rounds into one plan
     # (labels only shrink, so round(round(L)) is a valid schedule with the
     # same fixpoint) was measured 1.3x SLOWER at 2 and 3.5x at 3 on the
     # sf0.1 eps-graph — Spark re-executes an unmaterialized common subplan
     # once per reference, and each round references its input 3x (neighbor
     # min, chase mapping, candidate self), so k fused rounds run 3^(k-1)
-    # copies of the inner round. The knob stays for re-measurement on
-    # engines with common-subexpression reuse.
-    rounds_per_mat = max(1, int(os.environ.get("GOS2_CC_RPM", "1")))
+    # copies of the inner round.
     converged = False
     rounds_left = max_iterations
-    if contract_map is not None and sym.isEmpty():
+    if sym.isEmpty():
         # every component was partition-local: nothing left to stitch
         converged = True
         rounds_left = 0
     while rounds_left > 0:
-        width = min(rounds_per_mat, rounds_left)
-        rounds_left -= width
-        new_labels = labels.withColumn("_old0", F.col("label"))
-        for _ in range(width):
-            new_labels = _one_round(new_labels, carry=("_old0",))
+        rounds_left -= 1
+        new_labels = _one_round(
+            labels.withColumn("_old0", F.col("label")), carry=("_old0",)
+        )
         labels, changed = _apply(
             new_labels.select(
                 "key",
@@ -453,8 +437,6 @@ def connected_components(
             "the bound for graphs with astronomical diameter.",
             max_iterations,
         )
-    if contract_map is None:
-        return labels.select(F.col("key"), F.col("label").alias("component"))
     # compose: node -> local label -> stitched component; isolated nodes
     # (no edges inside the node universe) keep their own key
     stitched = contract_map.join(

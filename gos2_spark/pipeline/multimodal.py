@@ -379,17 +379,3 @@ def extract_features(
 
     return media.mapInPandas(gen, schema=FEATURE_SCHEMA)
 
-
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Pure-SQL resize planning: target dims preserving aspect ratio.
-
-    The actual pixel resample belongs in the decode hook; the plan (and its
-    partition-friendly arithmetic) is native."""
-    w, h = F.col("meta_width"), F.col("meta_height")
-    scale = F.least(F.lit(max_side) / w, F.lit(max_side) / h, F.lit(1.0))
-    return media.select(
-        "media_id",
-        w.alias("src_width"), h.alias("src_height"),
-        F.greatest(F.round(w * scale).cast("int"), F.lit(1)).alias("dst_width"),
-        F.greatest(F.round(h * scale).cast("int"), F.lit(1)).alias("dst_height"),
-    )

@@ -170,14 +170,6 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def analyze(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass text analysis: language guess + quality + counts + fingerprint."""
-    out = quality_features(docs, text_col)
-    return out.withColumn("lang_guess", language_id(F.col(text_col))).withColumn(
-        "bpe_ish_tokens", bpe_ish_token_count(F.col(text_col))
-    ).withColumn("fingerprint", fingerprint(F.col(text_col)))
-
-
 def _max_run_length(sorted_arr: Column) -> Column:
     """Longest run of equal adjacent elements in a sorted array — i.e. the
     max multiplicity — via a single O(n) fold (no explode, no shuffle)."""

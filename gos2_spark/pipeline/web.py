@@ -72,30 +72,6 @@ def domain_stats(
     )
 
 
-def domain_quality_prior(
-    pages: DataFrame,
-    quality_col: Column,
-    url_col: str = "url",
-    broadcast: bool | None = None,
-) -> DataFrame:
-    """Join each page with its domain's mean quality score (the 'domain
-    prior' used to keep/drop borderline pages).
-
-    The per-domain aggregate has O(domains) rows — small for a focused
-    crawl but ~10^8 for the full web, which would OOM a forced broadcast.
-    Default (``broadcast=None``) leaves the strategy to Catalyst/AQE,
-    which broadcasts exactly when the aggregate fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` and falls back to a shuffled
-    hash join keyed by domain otherwise; pass True/False to force."""
-    parts = with_url_parts(pages, url_col)
-    prior = parts.groupBy("domain").agg(F.avg(quality_col).alias("domain_prior"))
-    if broadcast is True:
-        prior = F.broadcast(prior)
-    elif broadcast is False:
-        prior = prior.hint("shuffle_hash")
-    return parts.join(prior, "domain", "left")
-
-
 def url_canonicalize(url_col: Column) -> Column:
     """Canonical URL form (engine-defined, deterministic): drop the
     fragment, lowercase the scheme://host[:port] head, strip default

@@ -473,58 +473,6 @@ def rect_contains(
 
 _GEO_RE = r"(-?\d{1,2}\.\d{3,}),\s*(-?\d{1,3}\.\d{3,})"
 
-def _build_geoparse_cells():
-    from pyspark.sql.types import DoubleType as _D
-    from pyspark.sql.types import LongType as _L
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType([
-        StructField("lat", _D()),
-        StructField("lng", _D()),
-        StructField("cell_id", _L()),
-    ])
-    # RE2 named-group pattern for pyarrow.compute.extract_regex (C++,
-    # vectorized — ~10x faster than per-row Python re over Arrow batches)
-    pattern = r"(?P<lat>-?\d{1,2}\.\d{3,}),\s*(?P<lng>-?\d{1,3}\.\d{3,})"
-
-    @pandas_udf(schema)
-    def geoparse_cells(text: pd.Series) -> pd.DataFrame:
-        """Fused geoparse + leaf-cell assignment, one pass per Arrow batch.
-
-        Critical plan property: UDF outputs are concrete attributes, so the
-        regex runs EXACTLY once per row — expressed natively, Catalyst
-        re-evaluates the extraction at every consuming operator (observed
-        9x in the join plan) and the whole pipeline becomes regex-bound.
-        """
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arr = pa.Array.from_pandas(text, type=pa.string())
-        ext = pc.extract_regex(arr, pattern)
-        lat_s = pc.struct_field(ext, "lat")
-        lng_s = pc.struct_field(ext, "lng")
-        lat = pc.cast(lat_s, pa.float64()).to_numpy(zero_copy_only=False)
-        lng = pc.cast(lng_s, pa.float64()).to_numpy(zero_copy_only=False)
-        ok = (
-            ~np.isnan(lat) & ~np.isnan(lng)
-            & (lat >= -90.0) & (lat <= 90.0)
-            & (lng >= -180.0) & (lng <= 180.0)
-        )
-        lat = np.where(ok, lat, np.nan)
-        lng = np.where(ok, lng, np.nan)
-        cell = np.zeros(len(lat), dtype=np.int64)
-        if ok.any():
-            ids = PJ.cellid_from_latlng(lat[ok], lng[ok])
-            cell[ok] = (ids ^ _BIAS).view(np.int64)
-        out = pd.DataFrame({"lat": lat, "lng": lng, "cell_id": cell})
-        out.loc[~ok, "cell_id"] = None
-        return out
-
-    return geoparse_cells
-
-
-geoparse_cells = _build_geoparse_cells()
-
 
 def geoparse(text: Column) -> Column:
     """[SQL] deterministic lat/lng extraction from page text.
@@ -566,23 +514,6 @@ def geoparse_all(text: Column) -> Column:
         lambda p: (p["lat"] >= -90.0) & (p["lat"] <= 90.0)
         & (p["lng"] >= -180.0) & (p["lng"] <= 180.0),
     )
-
-
-def register_all(spark) -> None:
-    """Register the surface for SQL use: SELECT s2_cellid(lat, lng) ..."""
-    spark.udf.register("s2_cellid", s2_cellid)
-    spark.udf.register("s2_cellid_at", s2_cellid_at)
-    spark.udf.register("s2_parent", s2_parent)
-    spark.udf.register("s2_level", s2_level)
-    spark.udf.register("s2_range_min", s2_range_min)
-    spark.udf.register("s2_range_max", s2_range_max)
-    spark.udf.register("s2_children", s2_children)
-    spark.udf.register("s2_edge_neighbors", s2_edge_neighbors)
-    spark.udf.register("s2_token", s2_token)
-    spark.udf.register("s2_from_token", s2_from_token)
-    spark.udf.register("s2_cell_lat", s2_cell_lat)
-    spark.udf.register("s2_cell_lng", s2_cell_lng)
-    spark.udf.register("s2_distance_rad", s2_distance_rad)
 
 
 def route_distance_udf(waypoints):

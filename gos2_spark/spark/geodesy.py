@@ -272,26 +272,6 @@ def duckdb_steps_cte(base_cte: str, steps: list[tuple[str, str]]) -> str:
     return ",\n".join(parts), prev
 
 
-def vincenty_distance(
-    df: DataFrame, iters: int = 6, out_col: str = "vincenty_m"
-) -> DataFrame:
-    """WGS84 inverse geodesic distance in meters between (lat1,lng1) and
-    (lat2,lng2) degree columns, appended as ``out_col``."""
-    steps = vincenty_steps(iters)
-    tmp = [n for n, _ in steps if n != "vincenty_m"]
-    out = apply_steps(df, steps)
-    if out_col != "vincenty_m":
-        out = out.withColumnRenamed("vincenty_m", out_col)
-    return out.drop(*tmp)
-
-
-def rhumb_line(df: DataFrame) -> DataFrame:
-    """Rhumb-line distance (m) and bearing (deg) columns appended."""
-    steps = rhumb_steps()
-    tmp = [n for n, _ in steps if n not in ("rhumb_m", "rhumb_brg_deg")]
-    return apply_steps(df, steps).drop(*tmp)
-
-
 def utm_steps() -> list[tuple[str, str]]:
     """(name, sql_expr) chain: lat/lng degrees -> UTM zone, easting,
     northing (Snyder 1987 transverse-Mercator series on WGS84, k0 =

@@ -7,8 +7,8 @@ into interior cells (verdict known) and boundary cells (exact vectorized
 crossing-parity kernel over Arrow batches). Parity anchors:
 
 - covering membership == CellUnion.ContainsCellID binary search
-  (cellunion.go:118-133), here an ancestor-explode hash equi-join or a
-  range predicate on bias-encoded ids;
+  (cellunion.go:118-133), here one parent-key hash probe into a
+  single-level grid plus a leaf-range predicate on bias-encoded ids;
 - refinement == Loop.Contains crossing parity (loop.go:532-558) seeded with
   the broadcast origin_inside;
 - kNN == cap-doubling coverings (cap.go:294-299) + exact angle distances
@@ -16,8 +16,6 @@ crossing-parity kernel over Arrow batches). Parity anchors:
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -171,14 +169,6 @@ class TileSet:
             out, "tile_idx int, cov_cell long, cov_rmin long, cov_rmax long, is_interior boolean"
         )
 
-    def covering_levels(self) -> list[int]:
-        levels = set()
-        for t in self.tiles.values():
-            arr = np.array(t["covering"].ids, dtype=np.uint64)
-            if len(arr):
-                levels.update(int(l) for l in H.level(arr))
-        return sorted(levels)
-
     def payload(self) -> dict:
         """Executor-side payload (broadcast), keyed by integer tile index."""
         return {
@@ -192,7 +182,7 @@ class TileSet:
     def spark_artifacts(self, spark: SparkSession) -> dict:
         """Per-session join-side artifacts, built once and memoized: the
         covering DataFrame, the executor payload broadcast, the refine UDF,
-        the prefilter ranges, and the covering levels. Rebuilding these per
+        the prefilter ranges and the single-level grid. Rebuilding these per
         join call cost ~2s of driver/scheduling time per query."""
         key = id(spark.sparkContext)
         cached = getattr(self, "_artifacts", None)
@@ -202,35 +192,15 @@ class TileSet:
             "cov": self.covering_df(spark),
             "bc": spark.sparkContext.broadcast(self.payload()),
             "ranges": self.merged_ranges(),
-            "levels": self.covering_levels(),
         }
         art["grid_level"], art["grid"] = self.grid_df(spark)
         art["refine"] = _make_refine_udf(art["bc"])
         self._artifacts = (key, art)
         return art
 
-    def boundary_area_fraction(self) -> float:
-        """Fraction of the covering's total area held by BOUNDARY cells
-        (covering cells not fully inside any tile) — a STATIC, driver-side
-        signal (4^-level per cell, no data peek) for choosing the
-        refinement plan shape: when the boundary band is a sliver (finer
-        coverings / higher max_cells), almost every candidate row is
-        interior-by-construction and ``refine_mode='split'`` lets them
-        bypass the Arrow round-trip entirely."""
-        total = 0.0
-        boundary = 0.0
-        for t in self.tiles.values():
-            interior = set(t["interior"].ids)
-            for cid in t["covering"].ids:
-                a = 4.0 ** -H.level_scalar(cid)
-                total += a
-                if cid not in interior:
-                    boundary += a
-        return boundary / total if total else 0.0
-
     def grid_table(self, budget: int = 65536) -> tuple[int, list[tuple]]:
-        """Single-level grid index over the covering, for the ``grid``
-        join strategy: (grid_level L, rows), rows =
+        """Single-level grid index over the covering, the build side of
+        the point-in-polygon join: (grid_level L, rows), rows =
         (tile_idx, grid_key, is_interior, rmin, rmax) with BIASED ids.
 
         Each covering cell becomes rows keyed by level-L cells: cells
@@ -239,9 +209,9 @@ class TileSet:
         row keeps the ORIGINAL cell's [rmin, rmax] leaf range, so
         ``grid_key == Parent(point, L) AND point BETWEEN rmin AND rmax``
         matches a point exactly when the original covering cell contains
-        it — the match set is IDENTICAL to the ancestor-explode equi-join,
-        but each point computes ONE ancestor key and makes ONE hash probe
-        instead of one per covering level. L is the finest level whose
+        it (CellUnion.ContainsCellID), with ONE ancestor key and ONE hash
+        probe per point rather than one per covering level. L is the finest
+        level whose
         expansion stays under ``budget`` rows (a coarser L never expands,
         it only packs more disjoint ranges per key, which the BETWEEN
         prunes post-probe)."""
@@ -297,51 +267,25 @@ class TileSet:
         )
         return level, df
 
-    def merged_ranges(
-        self, max_ranges: int = 64, boundary_only: bool = False
-    ) -> list[tuple[int, int]]:
+    def merged_ranges(self) -> list[tuple[int, int]]:
         """Disjoint (rmin, rmax) biased-id ranges covering ALL tiles.
 
         Drives the pushdown-friendly prefilter: an OR-chain of BETWEENs in
         whole-stage codegen that rejects the vast majority of rows before
-        the ancestor explode (and prunes parquet row groups on cell-sorted
+        the grid probe (and prunes parquet row groups on cell-sorted
         data). The union covering is coarsened (cells lifted to parents)
-        until at most ``max_ranges`` spans remain — a superset, so the
-        prefilter only ever passes extra rows to the exact join.
+        until at most 64 spans remain — a superset, so the prefilter only
+        ever passes extra rows to the exact join.
 
-        ``boundary_only=True`` restricts the union to the BOUNDARY
-        covering cells (those not fully inside their tile) — the tight
-        prefilter for refine_mode='split''s boundary branch: on a
-        cell-sorted table its row-group pruning skips the (dominant)
-        interior spans entirely, so the branch's lat/lng re-scan reads
-        near-zero bytes instead of re-reading every candidate row group.
-        Still a superset of the rows that can reach the boundary refine
-        (every non-interior grid match lies inside its covering cell's
-        leaf range), so the match set is unchanged.
-
-        Memoized per (max_ranges, boundary_only): the CellUnion
-        normalize + coarsening loop is pure driver work that otherwise
-        re-runs on every join build (~0.1 s per call on a 2k-cell
-        covering — per-JOB fixed cost that Amdahl-limits short bench
-        walls; a TileSet is immutable after construction).
+        Memoized: the CellUnion normalize + coarsening loop is pure driver
+        work that otherwise re-runs on every join build (~0.1 s per call on
+        a 2k-cell covering; a TileSet is immutable after construction).
         """
         memo = getattr(self, "_ranges_memo", None)
-        if memo is None:
-            memo = self._ranges_memo = {}
-        mkey = (max_ranges, boundary_only)
-        if mkey in memo:
-            return memo[mkey]
-        all_cells: list[int] = []
-        for t in self.tiles.values():
-            if boundary_only:
-                interior = set(t["interior"].ids)
-                all_cells.extend(
-                    c for c in t["covering"].ids if c not in interior
-                )
-            else:
-                all_cells.extend(t["covering"].ids)
-        cu = CellUnion(all_cells)
-        while len(cu.ids) > max_ranges:
+        if memo is not None:
+            return memo
+        cu = CellUnion([c for t in self.tiles.values() for c in t["covering"].ids])
+        while len(cu.ids) > 64:
             lifted = []
             for cid in cu.ids:
                 lvl = H.level_scalar(cid)
@@ -358,8 +302,8 @@ class TileSet:
                 merged[-1][1] = max(merged[-1][1], hi)
             else:
                 merged.append([lo, hi])
-        memo[mkey] = [(lo, hi) for lo, hi in merged]
-        return memo[mkey]
+        self._ranges_memo = [(lo, hi) for lo, hi in merged]
+        return self._ranges_memo
 
 
 def _make_refine_udf(bc):
@@ -423,58 +367,30 @@ def point_in_polygon_join(
     how: str = "inner",
     point_key: str = "url",
     cell_col: str = "cell_id",
-    strategy: str = "grid",
     rebalance: bool = True,
-    refine_mode: str = "fused",
 ) -> DataFrame:
     """Join points (with a leaf ``cell_col``) against polygon tiles.
 
-    Plan: broadcast-hash covering join -> split interior / boundary ->
-    vectorized refine on boundary rows only -> union. Strategies (all
-    produce the identical match set; pytest pins grid==ancestor==oracle):
-
-    - ``grid`` (default): ONE bitwise ancestor key per point probed
-      against a single-level broadcast grid built from the covering (see
-      TileSet.grid_table). Measured 1.4-1.8x the ancestor strategy on the
-      cell-sorted staged layout at 50M rows — candidate rows through the
-      DRAM-bound join stage drop by the covering-level count.
-    - ``ancestor``: explode each point to its ancestor at every distinct
-      covering level; equi-join the broadcast covering. Wins when the
-      covering's level span is so wide the grid would pack many disjoint
-      ranges per key.
-    - ``range``: broadcast range join on the covering's [rmin, rmax] —
-      O(cells) per row, for tiny coverings only.
+    Plan: codegen range prefilter -> ONE bitwise ancestor key per point
+    probed against the broadcast single-level grid of the covering (see
+    TileSet.grid_table) -> vectorized refine of boundary rows -> per-tile
+    rows. Pytest pins the match set against a pure-Python oracle.
 
     how: 'inner' (rows + tile_id), 'semi' (distinct matching points),
     'anti' (points matching no tile).
 
-    refine_mode — how interior-by-construction candidates (rows whose
-    covering cell is fully inside a tile) reach the output:
-
-    - ``fused`` (default): ONE branch; the refine kernel carries an
-      interior skip mask, so interior rows do zero geometry but still
-      ride the Arrow round-trip. Safe for ANY upstream (the plan below
-      the join executes once).
-    - ``split``: interior rows pass through in pure JVM; ONLY boundary
-      rows enter the Python refine. The upstream plan executes TWICE
-      (once per branch) — a win exactly when the scan is cheap (staged
-      narrow cell-sorted table) and the covering is fine enough that the
-      boundary band is a sliver (see TileSet.boundary_area_fraction; at
-      max_cells=512 on the 4-city bench covering the band holds 3.5k of
-      15.9M candidates). Do NOT use over expensive upstreams
-      (geoparse-on-read) — the replay costs more than the Arrow saving.
-
-    Match sets are identical across strategies AND refine modes (pytest
-    pins grid==ancestor==range and fused==split against the oracle).
+    The join stays SINGLE-BRANCH: interior-by-construction candidates
+    (rows whose covering cell is fully inside a tile) ride the refine
+    kernel with a skip mask and do zero geometry, so the plan below the
+    join executes once whatever its cost.
     """
     spark = points.sparkSession
     art = tileset.spark_artifacts(spark)
-    cov = art["cov"]
     refine = art["refine"]
+    grid = art["grid"]
 
     # cheap codegen prefilter: disjoint covering ranges reject rows far from
-    # every tile BEFORE the ancestor explode (explode multiplies rows by the
-    # number of covering levels — only survivors pay it)
+    # every tile BEFORE the grid probe
     # (built as ONE parsed SQL string: a per-range Column chain costs ~2
     # py4j roundtrips per range per plan build)
     pre = F.expr(
@@ -486,52 +402,17 @@ def point_in_polygon_join(
     all_points = points  # anti-join must see unfiltered rows
     points = points.where(pre)
 
-    def _candidates(src: DataFrame) -> DataFrame:
-        if strategy == "ancestor":
-            levels = art["levels"]
-            anc = F.explode(
-                F.array(*[s2_parent_sql(F.col(cell_col), l) for l in levels])
-            ).alias("_anc")
-            pts = src.select("*", anc)
-            j = pts.join(
-                F.broadcast(cov), pts["_anc"] == cov["cov_cell"], "inner"
-            ).drop("_anc")
-        elif strategy == "grid":
-            # one ancestor key + one broadcast hash probe per point (vs one
-            # per covering level with "ancestor"): the single-level grid
-            # table carries each covering cell's original leaf range, so
-            # the equi probe + BETWEEN yields the identical match set with
-            # ~levels x fewer candidate rows through the join pipeline —
-            # the term the staged-deployment stage decomposition showed to
-            # be DRAM-bound
-            grid = art["grid"]
-            gkey = s2_parent_sql(F.col(cell_col), art["grid_level"])
-            pts = src.withColumn("_gk", gkey)
-            j = (
-                pts.join(
-                    F.broadcast(grid),
-                    (pts["_gk"] == grid["grid_key"])
-                    & (F.col(cell_col) >= F.col("g_rmin"))
-                    & (F.col(cell_col) <= F.col("g_rmax")),
-                    "inner",
-                )
-                .drop("_gk")
-            )
-        elif strategy == "range":
-            j = src.join(
-                F.broadcast(cov),
-                (F.col(cell_col) >= F.col("cov_rmin"))
-                & (F.col(cell_col) <= F.col("cov_rmax")),
-                "inner",
-            )
-        else:
-            raise ValueError(f"unknown strategy {strategy!r}")
-        # shuffle only what refinement needs: the covering columns are
-        # dead after the join and the repartition below would otherwise
-        # carry them (3 longs/row ≈ 25% of the exchange payload)
-        return j.select(*src.columns, "tile_idx", "is_interior")
-
-    joined = _candidates(points)
+    # one ancestor key + one broadcast hash probe per point: the grid table
+    # carries each covering cell's original leaf range, so the equi probe +
+    # BETWEEN yields exactly the covering's match set
+    pts = points.withColumn("_gk", s2_parent_sql(F.col(cell_col), art["grid_level"]))
+    joined = pts.join(
+        F.broadcast(grid),
+        (pts["_gk"] == grid["grid_key"])
+        & (F.col(cell_col) >= F.col("g_rmin"))
+        & (F.col(cell_col) <= F.col("g_rmax")),
+        "inner",
+    ).select(*points.columns, "tile_idx", "is_interior")
 
     # REBALANCE matched rows before refinement: with cell-clustered FILES
     # (e.g. one file per coarse cell / per city) all rows matching a tile
@@ -542,78 +423,27 @@ def point_in_polygon_join(
     # COUNTS, so a cluster holding x% of rows already spans ~x% of the
     # partitions — measured at 50M rows the exchange there is pure
     # overhead (+20% wall at 8 and 32 cores) and callers should pass
-    # rebalance=False; keep it on for hot-file layouts.
-    # The join stays SINGLE-BRANCH: the interior/boundary verdict is a skip
-    # mask INSIDE the refine kernel (see _make_refine_udf) — splitting into
-    # two filtered sub-plans re-executed the whole upstream per branch.
-    # ``rebalance=False`` skips the exchange for inputs that are NOT
-    # cell-clustered (e.g. crawl-ordered pages): matched rows are already
-    # spread across the scan partitions and the shuffle is pure overhead.
+    # rebalance=False; so should inputs that are NOT cell-clustered (e.g.
+    # crawl-ordered pages), whose matches are already spread across the
+    # scan partitions. Keep it on for hot-file layouts.
     if rebalance:
-        n_part = spark.sparkContext.defaultParallelism * 2
-        joined = joined.repartition(n_part)
-    if refine_mode == "split":
-        interior = joined.where(F.col("is_interior"))
-        # The boundary branch REPLAYS the upstream (that is the split
-        # trade), so give its scan the TIGHT prefilter: only the boundary
-        # covering cells' leaf ranges. Every candidate that can reach the
-        # refine (a non-interior grid match) lies inside its covering
-        # cell's range, so the match set is identical — but on a
-        # cell-sorted table the branch's row-group pruning now skips the
-        # interior spans. Boundary cells are FRAGMENTED in Hilbert order
-        # (they rim each tile), so this prefilter keeps finer ranges than
-        # the main one — row-group-stat accounting on the 16M-row staged
-        # table (max_cells=512): 64 coarsened ranges leave 38/128 row
-        # groups = 66 MB; 128 leave 10/128 = 21 MB vs 87 MB for the
-        # round-4 full-range boundary scan (4x fewer branch bytes, 2.2x
-        # fewer total job bytes). NOT finer: Catalyst's per-run plan
-        # analysis grows superlinearly with disjunct count (242 ranges
-        # added ~1 s of driver time per run, swamping the last 4 MB).
-        pre_b = F.expr(
-            " OR ".join(
-                f"(`{cell_col}` BETWEEN {lo} AND {hi})"
-                for lo, hi in tileset.merged_ranges(
-                    max_ranges=128, boundary_only=True
-                )
-            )
-            or "false"
+        joined = joined.repartition(spark.sparkContext.defaultParallelism * 2)
+    matched = (
+        joined
+        .withColumn(
+            "inside",
+            refine(F.col("tile_idx"), F.col("lat"), F.col("lng"), F.col("is_interior")),
         )
-        joined_b = _candidates(all_points.where(pre_b))
-        if rebalance:
-            joined_b = joined_b.repartition(n_part)
-        boundary = (
-            joined_b.where(~F.col("is_interior"))
-            .withColumn(
-                "inside",
-                refine(
-                    F.col("tile_idx"), F.col("lat"), F.col("lng"),
-                    F.col("is_interior"),
-                ),
-            )
-            .where(F.col("inside"))
-            .drop("inside")
-        )
-        matched = interior.unionByName(boundary)
-    elif refine_mode == "fused":
-        matched = (
-            joined
-            .withColumn(
-                "inside",
-                refine(F.col("tile_idx"), F.col("lat"), F.col("lng"), F.col("is_interior")),
-            )
-            .where(F.col("inside"))
-            .drop("inside")
-        )
-    else:
-        raise ValueError(f"unknown refine_mode {refine_mode!r}")
+        .where(F.col("inside"))
+        .drop("inside")
+    )
 
     # map the integer index back to the user-facing tile id
     name_arr = F.array(*[F.lit(str(t)) for t in tileset.tile_ids()])
     matched = matched.withColumn(
         "tile_id", F.element_at(name_arr, F.col("tile_idx") + 1)
     )
-    result_cols = [c for c in points.columns] + ["tile_id"]
-    inner = matched.select(*result_cols)
+    inner = matched.select(*points.columns, "tile_id")
 
     if how == "inner":
         return inner
@@ -1062,7 +892,7 @@ def knn_join_df(
     # dense bulk (hot-city queries) at the cap the skew guard chose, so
     # they never touch a coarser level whose blocks can be 4^batch x
     # bigger. Only the sparse stragglers pay the batched coarser rounds.
-    levels_per_round = int(os.environ.get("GOS2_KNN_LPR", "4"))
+    levels_per_round = 4
     budget = max_rounds
     first = True
     while budget > 0 and level >= 1 and nq_left > 0:
@@ -1560,47 +1390,6 @@ def tileset_from_geojson(
             or (feat.get("properties") or {}).get(id_property)
             or f"tile_{i}"
         )
-        tiles[tid] = loops[0] if len(loops) == 1 else Polygon(loops)
-    return TileSet(tiles, max_cells=max_cells, workers=workers)
-
-
-def tileset_from_wkt(
-    wkt_by_id: dict,
-    max_cells: int = 64,
-    workers: int | None = None,
-) -> TileSet:
-    """{tile_id: WKT string} -> TileSet for POLYGON / MULTIPOLYGON
-    geometries (the other common interchange format, e.g. what a
-    warehouse exports from ST_AsText).
-
-    WKT is [lng lat] coordinate order like GeoJSON; rings close by
-    repeating the first position; first ring = exterior, rest = holes —
-    all handled identically to tileset_from_geojson (winding-agnostic via
-    the Polygon depth forest)."""
-    import re
-
-    from ..geometry import Polygon
-
-    def _parse_ring(txt: str):
-        pts = []
-        for pair in txt.split(","):
-            lng, lat, *_ = pair.split()
-            pts.append((float(lat), float(lng)))
-        if len(pts) > 1 and pts[0] == pts[-1]:
-            pts = pts[:-1]
-        return Loop.from_latlngs_deg(pts)
-
-    def _rings(body: str):
-        # ring bodies are the innermost parenthesized groups
-        return [m.group(1) for m in re.finditer(r"\(([^()]+)\)", body)]
-
-    tiles: dict = {}
-    for tid, wkt in wkt_by_id.items():
-        head, _, body = wkt.strip().partition("(")
-        gtype = head.strip().upper()
-        if gtype not in ("POLYGON", "MULTIPOLYGON"):
-            raise ValueError(f"tile {tid!r}: unsupported WKT type {gtype!r}")
-        loops = [_parse_ring(r) for r in _rings("(" + body)]
         tiles[tid] = loops[0] if len(loops) == 1 else Polygon(loops)
     return TileSet(tiles, max_cells=max_cells, workers=workers)
 

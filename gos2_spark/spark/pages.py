@@ -121,21 +121,19 @@ def geoparsed_pages(
     pages: DataFrame,
     level: int | None = None,
     keep: tuple[str, ...] = ("url",),
-    native_cellid: bool = True,
 ) -> DataFrame:
     """pages -> (keep..., lat, lng, cell_id); rows without a location drop.
 
     Plan shape matters here. The regex runs exactly once per row behind a
     Generate barrier (a native regexp_extract gets re-evaluated by Catalyst
     at every consuming operator; we measured 9 copies in the join plan) and
-    stays in the JVM. With ``native_cellid`` (default) the Hilbert encode
-    is ALSO pure Spark SQL (functions.add_cellid_sql) so the whole indexing
-    path has no Python worker at all — measured 3.1x faster than the Arrow
-    kernel and bit-identical over 10M-point corpora; set False to run the
-    numpy golden-reference kernel instead. ``level`` adds a parent-cell
+    stays in the JVM. The Hilbert encode is ALSO pure Spark SQL
+    (functions.add_cellid_sql) so the whole indexing path has no Python
+    worker at all — measured 3.1x faster than the Arrow kernel and
+    bit-identical over 10M-point corpora. ``level`` adds a parent-cell
     join key via pure bitwise SQL.
     """
-    from .functions import _GEO_RE, add_cellid_sql, s2_cellid
+    from .functions import _GEO_RE, add_cellid_sql
 
     # explode(array(regex)) is a Generate barrier: the match string becomes a
     # concrete attribute, so the expensive regexp runs exactly once per row
@@ -151,10 +149,7 @@ def geoparsed_pages(
         (F.col("lat") >= -90.0) & (F.col("lat") <= 90.0)
         & (F.col("lng") >= -180.0) & (F.col("lng") <= 180.0)
     )
-    if native_cellid:
-        out = add_cellid_sql(out, "lat", "lng", "cell_id")
-    else:
-        out = out.withColumn("cell_id", s2_cellid(F.col("lat"), F.col("lng")))
+    out = add_cellid_sql(out, "lat", "lng", "cell_id")
     if level is not None:
         out = out.withColumn(f"cell_l{level}", s2_parent_sql(F.col("cell_id"), level))
     return out

@@ -37,8 +37,6 @@ from ..geometry.boolean_ops import destructive_union
 from ..kernels import hilbert as H
 from .joins import TileSet
 
-_BIAS = np.uint64(1 << 63)
-
 
 def level_cell_ids_df(spark: SparkSession, level: int) -> DataFrame:
     """All ``6 * 4**level`` level-``level`` cell ids (biased signed int64)
@@ -254,114 +252,3 @@ def vectorize_cells(cell_ids: list[int], vertex_merge_radius: float | None = Non
         return destructive_union(pieces)
     return destructive_union(pieces, vertex_merge_radius)
 
-
-def vectorize_cells_distributed(
-    cells_df: DataFrame,
-    cell_col: str = "cell_id",
-    group_level: int = 4,
-    vertex_merge_radius: float | None = None,
-) -> Polygon:
-    """Distributed raster -> vector for cell sets beyond driver memory
-    (SURVEY §2.4: "at scale: GROUP BY tile + driver union per group").
-
-    Cells group by Parent(``group_level``) — spatially contiguous Hilbert
-    blocks, pure bitwise SQL keys — and each group's n-way union runs
-    INSIDE an executor via applyInPandas (Arrow-batched; the engine ships
-    to executors through --py-files). The per-group boundary polygons
-    (tiny: interior cell edges already cancelled) are then merged by
-    FURTHER distributed rounds at coarser group levels down to the face
-    level, so driver traffic is bounded by the FINAL boundary (at most the
-    6 face polygons' loops), never by the number of level-``group_level``
-    groups — a continent vectorized at a fine level stays executor-side
-    throughout. Union is associative, so the result equals the driver-only
-    ``vectorize_cells`` up to the vertex-merge tolerance.
-    ``cells_df[cell_col]`` holds bias-encoded signed ids (engine
-    convention).
-    """
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, LongType, StructField, StructType,
-    )
-
-    from .pages import s2_parent_sql
-
-    schema = StructType([
-        StructField("grp", LongType()),
-        StructField("loop_idx", IntegerType()),
-        StructField("vertices", ArrayType(ArrayType(DoubleType()))),
-    ])
-    vmr = vertex_merge_radius
-
-    def union_group(pdf):
-        import pandas as _pd
-
-        from ..geometry import Polygon as _Polygon
-        from ..geometry.boolean_ops import destructive_union as _du
-        from ..geometry.cell import Cell as _Cell
-
-        ids = (pdf[cell_col].to_numpy(np.int64).view(np.uint64) ^ _BIAS)
-        pieces = [_Polygon.from_cell(_Cell(int(c))) for c in ids]
-        merged = _du(pieces) if vmr is None else _du(pieces, vmr)
-        rows = [
-            {
-                "grp": int(pdf["_grp"].iloc[0]),
-                "loop_idx": i,
-                "vertices": [list(map(float, v)) for v in loop.vertices],
-            }
-            for i, loop in enumerate(merged.loops)
-        ]
-        return _pd.DataFrame(rows, columns=["grp", "loop_idx", "vertices"])
-
-    def union_polys(pdf):
-        # merge already-vectorized per-group polygons under a coarser key
-        import pandas as _pd
-
-        from ..geometry import Loop as _Loop, Polygon as _Polygon
-        from ..geometry.boolean_ops import destructive_union as _du
-
-        polys = []
-        for _, sub in pdf.groupby("grp", sort=True):
-            sub = sub.sort_values("loop_idx")
-            loops = [
-                _Loop([tuple(v) for v in verts]) for verts in sub["vertices"]
-            ]
-            polys.append(_Polygon(loops))
-        merged = _du(polys) if vmr is None else _du(polys, vmr)
-        rows = [
-            {
-                "grp": int(pdf["_cgrp"].iloc[0]),
-                "loop_idx": i,
-                "vertices": [list(map(float, v)) for v in loop.vertices],
-            }
-            for i, loop in enumerate(merged.loops)
-        ]
-        return _pd.DataFrame(rows, columns=["grp", "loop_idx", "vertices"])
-
-    grouped = cells_df.select(
-        F.col(cell_col), s2_parent_sql(F.col(cell_col), group_level).alias("_grp")
-    )
-    boundary = grouped.groupBy("_grp").applyInPandas(union_group, schema)
-
-    # coarsen 3 levels (64 child groups) per distributed round until the
-    # face level: the collect below then carries at most 6 face polygons
-    lvl = group_level
-    while lvl > 0:
-        lvl = max(0, lvl - 3)
-        boundary = (
-            boundary.withColumn("_cgrp", s2_parent_sql(F.col("grp"), lvl))
-            .groupBy("_cgrp")
-            .applyInPandas(union_polys, schema)
-        )
-
-    from ..geometry import Loop
-
-    by_grp: dict[int, list] = {}
-    for r in boundary.collect():
-        by_grp.setdefault(r["grp"], []).append(
-            Loop([tuple(v) for v in r["vertices"]])
-        )
-    group_polys = [Polygon(loops) for loops in by_grp.values()]
-    if not group_polys:
-        return Polygon([])
-    if vmr is None:
-        return destructive_union(group_polys)
-    return destructive_union(group_polys, vmr)

@@ -25,8 +25,6 @@ from pyspark.sql import functions as F
 from ..kernels import hilbert as H
 from .pages import s2_parent_sql
 
-_BIAS = np.uint64(1 << 63)
-
 
 def cell_histogram(points: DataFrame, level: int, cell_col: str = "cell_id") -> DataFrame:
     """Row counts per level-``level`` cell (map-side partial agg is free)."""
@@ -34,15 +32,6 @@ def cell_histogram(points: DataFrame, level: int, cell_col: str = "cell_id") -> 
         points.groupBy(s2_parent_sql(F.col(cell_col), level).alias("cell"))
         .agg(F.count("*").alias("n"))
     )
-
-
-def hot_cells(points: DataFrame, level: int, threshold_frac: float = 0.01,
-              cell_col: str = "cell_id") -> list[int]:
-    """Biased ids of cells holding more than ``threshold_frac`` of all rows."""
-    hist = cell_histogram(points, level, cell_col)
-    total = points.count()
-    rows = hist.where(F.col("n") >= threshold_frac * total).collect()
-    return [r["cell"] for r in rows]
 
 
 def split_hot_cells(covering_ids: list[int], hot: set[int], extra_levels: int = 2) -> list[int]:
@@ -86,18 +75,3 @@ def salted_group_count(
     partial = salted.groupBy(group_col, "_salt").agg(F.count("*").alias("_partial"))
     return partial.groupBy(group_col).agg(F.sum("_partial").alias("count"))
 
-
-def repartition_by_cell(points: DataFrame, level: int, num_partitions: int,
-                        cell_col: str = "cell_id", salt_hot: bool = True,
-                        hot: list[int] | None = None, n_salts: int = 8) -> DataFrame:
-    """Range/hash repartition by parent cell, with per-row salt on hot cells.
-
-    Co-locates spatially-near rows (better scan locality + partition pruning
-    downstream) while fanning hot cells across ``n_salts`` partitions.
-    """
-    key = s2_parent_sql(F.col(cell_col), level)
-    if salt_hot and hot:
-        is_hot = key.isin([int(h) for h in hot])
-        salt = F.when(is_hot, F.pmod(F.xxhash64(F.col(cell_col)), F.lit(n_salts))).otherwise(F.lit(0))
-        return points.repartition(num_partitions, key, salt)
-    return points.repartition(num_partitions, key)

@@ -104,74 +104,6 @@ def write_points_cell_sorted(
     )
 
 
-def read_points_or_geoparse(
-    spark: SparkSession,
-    pages_location: str,
-    points_location: str | None = None,
-) -> tuple[DataFrame, bool]:
-    """The deployment-aware point source: prefer the staged cell-sorted
-    narrow points table (url, lat, lng, cell_id — the layout
-    ``write_points_cell_sorted`` produces, geoparsed ONCE at ingest) and
-    fall back to geoparse-on-read over the raw pages table.
-
-    Returns (points_df, staged). ``points_location`` defaults to
-    ``<pages_location>_points``. At 100 TB the staged table is the only
-    sane deployment — the raw-pages path re-runs the regex geoparse and
-    cell encode on every query, while the staged scan reads ~6x fewer
-    bytes per row AND gives the covering-range prefilter row-group
-    pruning; this helper makes every caller pick the staged layout
-    automatically once an ingest job has written it."""
-    import os as _os
-
-    from .pages import geoparsed_pages
-
-    loc = points_location or (pages_location.rstrip("/") + "_points")
-    try:
-        if "://" not in loc and not _os.path.exists(
-            _os.path.join(loc, "_SUCCESS")
-        ):
-            raise FileNotFoundError(loc)
-        df = read_pages(spark, loc)
-        cols = set(df.columns)
-        if {"lat", "lng", "cell_id"}.issubset(cols):
-            return df, True
-    except Exception:  # noqa: BLE001 — fall back to the raw pages scan
-        pass
-    return geoparsed_pages(read_pages(spark, pages_location)), False
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    buckets: int = 64,
-    sort_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed sink: hash-cluster rows on ``bucket_col`` into ``buckets``
-    files AT WRITE TIME (Spark native bucketing; on Iceberg the equivalent
-    is a ``bucket(N, col)`` partition transform).
-
-    This moves the shuffle from every query to the single write: any later
-    aggregate or equi-join keyed on ``bucket_col`` reads co-located data
-    and plans WITHOUT an Exchange (the scan's outputPartitioning already
-    matches). The at-scale use cases this engine targets:
-
-    - repeated content-hash dedup sweeps over a 100 TB corpus
-      (``groupBy(hash)`` becomes a single-stage aggregate);
-    - corpus-corpus equi-joins on url/content hash (both sides bucketed
-      with the same count -> zero-shuffle sort-merge join);
-    - cell-block self-joins where the block key is stored (bucketing by
-      the level-L parent co-locates the B side of distance joins).
-
-    Shuffle elimination is pytest-gated (test_checkpoint_skew.py asserts
-    the plans contain no Exchange)."""
-    w = df.write.mode(mode).bucketBy(buckets, bucket_col)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.format("parquet").saveAsTable(table)
-
-
 def input_fingerprint(spark: SparkSession, location: str) -> str:
     """Stable content fingerprint for checkpoint lineage: the Iceberg
     snapshot id when available, else a hash of the file listing + sizes."""

@@ -11,7 +11,7 @@ from gos2_spark.kernels import hilbert as H
 from gos2_spark.spark.checkpoint import CheckpointedRunner, lineage_hash
 from gos2_spark.spark.pages import geoparsed_pages, synth_pages
 from gos2_spark.spark.skew import (
-    cell_histogram, hot_cells, salted_group_count, split_hot_cells,
+    cell_histogram, salted_group_count, split_hot_cells,
 )
 
 
@@ -58,11 +58,11 @@ def test_checkpoint_runner_resume(spark, tmp_path):
     assert all(m["rows_out"] == 500 for m in metrics)
 
 
-def test_cell_histogram_and_hot_cells(points):
+def test_cell_histogram(points):
     hist = cell_histogram(points, 10)
     total = hist.agg(F.sum("n")).collect()[0][0]
     assert total == points.count()
-    hot = hot_cells(points, 10, threshold_frac=0.02)
+    hot = [r["cell"] for r in hist.where(F.col("n") >= 0.02 * total).collect()]
     # the city mixture concentrates ~40% of rows into a few cells
     assert len(hot) >= 1
     # every hot cell is a valid level-10 biased id
@@ -113,41 +113,6 @@ def test_pages_source_fallback_roundtrip(spark, tmp_path):
     write_pages(synth_pages(spark, 10), loc, mode="append")
     assert input_fingerprint(spark, loc) != f1
     assert read_pages(spark, loc).count() == 110
-
-
-def test_read_points_or_geoparse_staged_and_fallback(spark, tmp_path):
-    """The deployment-aware point source: with a staged cell-sorted
-    points table present it is read directly (staged=True, no geoparse in
-    the plan); without one it falls back to geoparse-on-read over the raw
-    pages — and both paths yield the identical point set."""
-    from gos2_spark.spark.pages import geoparsed_pages, synth_pages
-    from gos2_spark.spark.source import (
-        read_points_or_geoparse,
-        write_pages,
-        write_points_cell_sorted,
-    )
-
-    pages_loc = str(tmp_path / "pages_tbl")
-    write_pages(synth_pages(spark, 500), pages_loc, mode="overwrite")
-
-    # no staged table yet -> geoparse fallback
-    pts_fb, staged = read_points_or_geoparse(spark, pages_loc)
-    assert staged is False
-    fb = {(r["url"], r["cell_id"]) for r in pts_fb.select("url", "cell_id").collect()}
-
-    # stage it -> preferred automatically
-    write_points_cell_sorted(
-        geoparsed_pages(spark.read.parquet(pages_loc)),
-        pages_loc + "_points",
-        num_files=4,
-    )
-    pts_st, staged = read_points_or_geoparse(spark, pages_loc)
-    assert staged is True
-    st = {(r["url"], r["cell_id"]) for r in pts_st.select("url", "cell_id").collect()}
-    assert st == fb and len(st) > 0
-    # the staged plan must be a bare scan: no Python (geoparse) stage
-    plan = pts_st._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_distance_join_skewed_cities_exact(spark):
@@ -222,8 +187,8 @@ def test_cell_sorted_write_enables_pushdown(spark, tmp_path):
 
 
 def test_pip_join_prefilter_pushes_down_on_stored_points(spark, tmp_path):
-    """The staged-deployment path (bench_scaling --staged): when the pip
-    join reads a stored points table, its OR-of-BETWEEN covering
+    """The staged-deployment path (the perfbench ``pip_staged`` layout):
+    when the pip join reads a stored points table, its OR-of-BETWEEN covering
     prefilter must reach the parquet scan as PushedFilters — that is the
     row-group pruning the 100 TB layout depends on."""
     from gos2_spark.geometry import Loop
@@ -248,49 +213,6 @@ def test_pip_join_prefilter_pushes_down_on_stored_points(spark, tmp_path):
         for r in point_in_polygon_join(pts, tiles, how="inner").collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_bucketed_write_eliminates_shuffle(spark):
-    """write_bucketed moves the shuffle to write time: a later groupBy and
-    a self equi-join on the bucket column plan with NO Exchange, and
-    results equal the unbucketed computation."""
-    from gos2_spark.spark.source import write_bucketed
-
-    docs = (
-        spark.range(2000)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("text"), (F.col("id") % 700)).alias("text"),
-        )
-        .withColumn("h", F.md5("text"))
-    )
-    spark.sql("DROP TABLE IF EXISTS bucketed_docs_test")
-    write_bucketed(docs, "bucketed_docs_test", "h", buckets=8)
-    t = spark.table("bucketed_docs_test")
-
-    agg = t.groupBy("h").agg(
-        F.min("doc_id").alias("keep_id"), F.count("*").alias("n")
-    )
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan[:2000]
-    want = {
-        (r.keep_id, r.n)
-        for r in docs.groupBy("h")
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n"))
-        .collect()
-    }
-    assert {(r.keep_id, r.n) for r in agg.collect()} == want
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = t.alias("a").join(t.alias("b"), "h")
-        planj = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in planj, planj[:2000]
-        assert j.count() == docs.alias("a").join(docs.alias("b"), "h").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    spark.sql("DROP TABLE bucketed_docs_test")
 
 
 def test_curation_job_end_to_end_and_resume(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""WGS84 Vincenty inverse + rhumb-line kernels (gos2_spark/spark/geodesy.py).
+"""WGS84 Vincenty inverse + rhumb-line step chains (gos2_spark/spark/geodesy.py).
 
 Ground truth: closed-form ellipsoid facts (equatorial arc = a*dlon exactly,
 meridian quadrant = 10_001_965.729 m for WGS84) plus published geodesic
@@ -15,9 +15,7 @@ import pytest
 from gos2_spark.spark.geodesy import (
     apply_steps,
     duckdb_steps_cte,
-    rhumb_line,
     rhumb_steps,
-    vincenty_distance,
     vincenty_steps,
 )
 
@@ -165,14 +163,6 @@ def test_direct_inverse_roundtrip():
     for (_, _, la2, lo2, s), (d,) in zip(dest, back):
         assert -90.0 <= la2 <= 90.0 and -180.0 < lo2 <= 180.0
         assert d == pytest.approx(s, abs=1e-6)
-
-
-def test_helper_wrappers(spark):
-    df = spark.createDataFrame(CASES, "lat1 double, lng1 double, lat2 double, lng2 double")
-    v = vincenty_distance(df).columns
-    assert v == ["lat1", "lng1", "lat2", "lng2", "vincenty_m"]
-    r = rhumb_line(df).columns
-    assert r == ["lat1", "lng1", "lat2", "lng2", "rhumb_m", "rhumb_brg_deg"]
 
 
 def test_solar_position_physical_sanity():

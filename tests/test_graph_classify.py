@@ -295,6 +295,26 @@ def test_connected_components_wide_flat_graph_converges(spark):
     assert got == {v: 0 for v in nodes}
 
 
+def test_connected_components_repeated_seed_key_one_row(spark):
+    """A key seeded by several cliques (several ``initial_labels`` rows)
+    still yields exactly ONE (key, component) row, holding the component
+    minimum."""
+    from gos2_spark.pipeline.graph import connected_components
+
+    nodes = list(range(8))
+    edges = [(0, 1), (1, 2), (2, 3), (5, 6)]
+    # cliques {0,1}, {1,2}, {2,3}, {5,6}: keys 1 and 2 are seeded twice
+    seeds = [(0, 0), (1, 0), (1, 1), (2, 1), (2, 2), (3, 2), (5, 5), (6, 5)]
+    ndf = spark.createDataFrame([(v,) for v in nodes], "key long")
+    edf = spark.createDataFrame(edges, "key_a long, key_b long")
+    sdf = spark.createDataFrame(seeds, "key long, label long")
+    got = sorted(
+        (r["key"], r["component"])
+        for r in connected_components(ndf, edf, initial_labels=sdf).collect()
+    )
+    assert got == sorted(_ref_components(nodes, edges).items())
+
+
 # ---------------------------------------------------------------------------
 # Duplicate-span coverage
 # ---------------------------------------------------------------------------

@@ -139,34 +139,6 @@ def test_rasterize_pruned_deep_level(spark):
     assert len(got) > 50
 
 
-def test_vectorize_distributed_matches_driver(spark, tileset):
-    """Distributed per-group union + driver merge == driver-only vectorize
-    (union is associative): same loop count, area, and cell-center
-    containment."""
-    from gos2_spark.spark.raster import vectorize_cells_distributed
-
-    lvl = 10
-    interior = sorted(
-        cid for tid, cid, i in rasterize_intersect(tileset, lvl)
-        if i and tid == "nyc"
-    )
-    cells_df = spark.createDataFrame(
-        [(int(np.int64(np.uint64(c) ^ _BIAS)),) for c in interior], "cell_id long"
-    )
-    dist = vectorize_cells_distributed(cells_df, group_level=7)
-    local = vectorize_cells(interior)
-    a_dist = sum(l.area() for l in dist.loops)
-    a_local = sum(l.area() for l in local.loops)
-    assert len(dist.loops) == len(local.loops)
-    # merge ORDER differs between the two plans, so vertices within the
-    # 1.5e-15 merge radius round differently; areas agree to ~1e-8
-    assert a_dist == pytest.approx(a_local, rel=1e-6)
-    for cid in interior[:50]:
-        lat, lng = PJ.cellid_to_latlng(np.array([cid], dtype=np.uint64))
-        x, y, z = PJ.latlng_to_xyz(np.radians(lat), np.radians(lng))
-        assert dist.contains_point((float(x[0]), float(y[0]), float(z[0])))
-
-
 def test_rasterize_pruned_plan_no_global_range(spark, tileset):
     """Pruned enumeration must generate only per-range Range sources (sum
     of rows proportional to covered area), never the 6*4^L global grid."""

@@ -76,68 +76,16 @@ def _oracle_tiles(tileset, rows):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["ancestor", "range", "grid"])
-def test_point_in_polygon_join_matches_oracle(spark, points, tileset, strategy):
+def test_point_in_polygon_join_matches_oracle(spark, points, tileset):
     got = {
         (r.url, r.tile_id)
-        for r in point_in_polygon_join(points, tileset, strategy=strategy).collect()
+        for r in point_in_polygon_join(points, tileset).collect()
     }
     # oracle over candidate rows only (others provably outside all coverings)
     sample = points.select("url", "lat", "lng").collect()
     want = _oracle_tiles(tileset, sample)
     assert got == want
     assert len(got) > 0, "test tiles caught no pages — fixture broken"
-
-
-def test_point_in_polygon_join_split_refine_identical(spark, points, tileset):
-    """refine_mode='split' (interior rows bypass Arrow, only boundary
-    rows hit Python) must produce EXACTLY the fused match set, for every
-    join strategy and for semi/anti composition."""
-    sample = points.select("url", "lat", "lng").collect()
-    want = _oracle_tiles(tileset, sample)
-    for strategy in ("ancestor", "grid"):
-        got = {
-            (r.url, r.tile_id)
-            for r in point_in_polygon_join(
-                points, tileset, strategy=strategy, refine_mode="split"
-            ).collect()
-        }
-        assert got == want, strategy
-    semi_f = {
-        r.url
-        for r in point_in_polygon_join(points, tileset, how="semi").collect()
-    }
-    semi_s = {
-        r.url
-        for r in point_in_polygon_join(
-            points, tileset, how="semi", refine_mode="split"
-        ).collect()
-    }
-    assert semi_s == semi_f
-    anti_s = {
-        r.url
-        for r in point_in_polygon_join(
-            points, tileset, how="anti", refine_mode="split"
-        ).collect()
-    }
-    all_urls = {r.url for r in points.select("url").collect()}
-    assert anti_s == all_urls - semi_f
-
-
-def test_boundary_area_fraction_shrinks_with_finer_covering():
-    """The static split-mode signal: finer coverings concentrate area in
-    interior cells, so the boundary fraction drops as max_cells grows."""
-    from gos2_spark.geometry import Loop
-    from gos2_spark.spark.joins import TileSet
-
-    loops = {"nyc": Loop.regular(40.7128, -74.0060, 1.5, 16)}
-    fracs = [
-        TileSet(loops, max_cells=mc).boundary_area_fraction()
-        for mc in (8, 32, 512)
-    ]
-    assert all(0.0 <= f <= 1.0 for f in fracs)
-    assert fracs[0] > fracs[1] > fracs[2]
-    assert fracs[2] < 0.3
 
 
 def test_semi_and_anti_join(spark, points, tileset):
@@ -200,11 +148,18 @@ def test_knn_matches_bruteforce(spark, points):
 
 def test_join_plan_is_broadcast_no_shuffle(spark, points, tileset):
     """The covering join must be a broadcast hash join on codegen'd bitwise
-    keys — no shuffle exchange of the points side before the join."""
-    df = point_in_polygon_join(points, tileset, strategy="ancestor")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, "covering join degraded to SMJ"
+    keys — no shuffle exchange of the points side before the join. With
+    ``rebalance=False`` (the staged deployment) the plan has no shuffle
+    at all; the default adds only the round-robin rebalance after it."""
+    import re
+
+    for rebalance, shuffles in ((True, ["RoundRobinPartitioning"]), (False, [])):
+        df = point_in_polygon_join(points, tileset, rebalance=rebalance)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, plan[:2000]
+        assert "SortMergeJoin" not in plan, "covering join degraded to SMJ"
+        got = re.findall(r"(?<!Broadcast)Exchange (\w+)", plan)
+        assert got == shuffles, plan[:3000]
 
 
 def test_pages_text_byte_identical_per_url(spark):
@@ -653,41 +608,6 @@ def test_tileset_from_geojson_holes_and_multipolygon(spark):
     assert got == {0: "donut", 2: "pair", 3: "pair"}
 
 
-def test_tileset_from_wkt_matches_geojson(spark):
-    """WKT loader: the same donut + multipolygon as the GeoJSON test,
-    expressed as WKT, must produce identical pip-join results."""
-    from gos2_spark.spark.functions import s2_cellid
-    from gos2_spark.spark.joins import point_in_polygon_join, tileset_from_wkt
-
-    tiles = tileset_from_wkt(
-        {
-            "donut": (
-                "POLYGON((0 0, 20 0, 20 20, 0 20, 0 0),"
-                " (8 8, 12 8, 12 12, 8 12, 8 8))"
-            ),
-            "pair": (
-                "MULTIPOLYGON(((40 -10, 45 -10, 45 -5, 40 -5, 40 -10)),"
-                " ((50 -10, 55 -10, 55 -5, 50 -5, 50 -10)))"
-            ),
-        },
-        max_cells=16,
-    )
-    pts = [
-        (0, 5.0, 5.0), (1, 10.0, 10.0), (2, -7.0, 42.0),
-        (3, -7.0, 52.0), (4, -40.0, 100.0),
-    ]
-    df = spark.createDataFrame(
-        pts, "key long, lat double, lng double"
-    ).withColumn("cell_id", s2_cellid(F.col("lat"), F.col("lng")))
-    got = {
-        r["key"]: r["tile_id"]
-        for r in point_in_polygon_join(
-            df, tiles, how="inner", point_key="key"
-        ).collect()
-    }
-    assert got == {0: "donut", 2: "pair", 3: "pair"}
-
-
 def test_route_proximity_join_antimeridian(spark):
     """Corridor blocking must survive a route crossing the +/-180
     meridian (slerp midpoints near the date line, cross-face cell
@@ -803,49 +723,3 @@ class TestNearestFeatureJoin:
             ).collect()
         }
         assert nf == rd
-
-
-def test_split_boundary_branch_uses_tight_prefilter(spark, points, tileset, tmp_path):
-    """refine_mode='split' round-5 bandwidth increment: the boundary
-    branch's re-scan must carry the BOUNDARY-ONLY range prefilter (a
-    strict sub-span of the full covering prefilter, so cell-sorted
-    row-group pruning skips interior spans), and for a count-shaped job
-    Catalyst must late-materialize — the interior branch scanning
-    cell_id only, the boundary branch lat/lng/cell_id."""
-    full = tileset.merged_ranges()
-    bound = tileset.merged_ranges(max_ranges=128, boundary_only=True)
-    span = lambda rs: sum(hi - lo + 1 for lo, hi in rs)
-    assert span(bound) < span(full)
-    # every boundary range lies inside some full range (superset safety)
-    for lo, hi in bound:
-        assert any(flo <= lo and hi <= fhi for flo, fhi in full)
-
-    # staged layout: write the points cell-sorted, run the count job
-    pdir = str(tmp_path / "pts")
-    points.orderBy("cell_id").write.mode("overwrite").parquet(pdir)
-    staged = spark.read.parquet(pdir)
-    job = (
-        point_in_polygon_join(
-            staged, tileset, rebalance=False, refine_mode="split"
-        )
-        .groupBy("tile_id")
-        .agg(F.count("*").alias("n"))
-    )
-    plan = job._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    schemas = sorted(re.findall(r"ReadSchema: (struct<[^\n]*>)", plan))
-    assert schemas == [
-        "struct<cell_id:bigint>",
-        "struct<lat:double,lng:double,cell_id:bigint>",
-    ], schemas
-    # the tight prefilter's first boundary range literal is in the plan
-    assert str(bound[0][0]) in plan
-    # and the match set equals fused
-    fused = (
-        point_in_polygon_join(staged, tileset, rebalance=False)
-        .groupBy("tile_id").agg(F.count("*").alias("n"))
-    )
-    assert sorted((r["tile_id"], r["n"]) for r in job.collect()) == sorted(
-        (r["tile_id"], r["n"]) for r in fused.collect()
-    )

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from gos2_spark.pipeline.web import (
-    domain_quality_prior,
     domain_stats,
     with_url_parts,
 )
@@ -45,7 +44,7 @@ def test_url_parts(spark):
         assert r["path_depth"] == depth, url
 
 
-def test_domain_stats_and_prior(spark):
+def test_domain_stats(spark):
     rows = [
         ("https://www.a.com/x", "aaaa", 1.0),
         ("https://m.a.com/x/y", "bb", 3.0),
@@ -58,11 +57,6 @@ def test_domain_stats_and_prior(spark):
     assert stats["a.com"]["total_chars"] == 6
     assert stats["a.com"]["max_path_depth"] == 2
     assert stats["b.org"]["n_pages"] == 1
-
-    prior = domain_quality_prior(df, F.col("q"))
-    got = {r["url"]: r["domain_prior"] for r in prior.collect()}
-    assert got["https://www.a.com/x"] == pytest.approx(2.0)
-    assert got["https://b.org/z"] == pytest.approx(5.0)
 
 
 def test_line_dedup_drops_boilerplate_keeps_order(spark):
