@@ -7,8 +7,62 @@ AQE handles runtime re-planning and skew-join splitting at scale.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_GIB = 1 << 30
+# Heap cap: measured best for the sf0.1 + 2M-page workloads on 32 cores.
+_MAX_HEAP_GIB = 16
+# cgroup v2 and v1 memory limits; "max" or a missing file means no limit.
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_SIZE_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def _usable_memory_bytes() -> int:
+    """The smaller of physical memory and the process's cgroup limit."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in _CGROUP_LIMIT_FILES:
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():
+            limits.append(int(text))
+    return min(limits)
+
+
+def driver_memory() -> str:
+    """The driver heap size: ``$SPARK_DRIVER_MEM`` if set, else derived.
+
+    The derived default is half the usable memory, rounded down to whole
+    GiB, within [1g, 16g]. Half, because the heap is pretouched and stays
+    resident; the rest holds one Python worker per core, off-heap Arrow and
+    Netty buffers, the driver's Python process and the page cache. An
+    explicit setting larger than the usable memory raises ``ValueError``
+    instead of a JVM that cannot start.
+    """
+    usable = _usable_memory_bytes()
+    value = os.environ.get("SPARK_DRIVER_MEM")
+    if value is None:
+        gib = min(_MAX_HEAP_GIB, max(1, usable // 2 // _GIB))
+        return f"{gib}g"
+    m = re.fullmatch(r"(\d+)([kmgt])", value.strip().lower())
+    if m is None:
+        raise ValueError(
+            f"SPARK_DRIVER_MEM={value!r}: expected a whole number with a "
+            "k, m, g or t suffix, such as 3g or 3072m"
+        )
+    if int(m[1]) * _SIZE_UNITS[m[2]] > usable:
+        raise ValueError(
+            f"SPARK_DRIVER_MEM={value!r} is more than the "
+            f"{usable / _GIB:.1f} GiB of memory this process can use"
+        )
+    return value
 
 
 def get_spark(
@@ -21,13 +75,15 @@ def get_spark(
 
     On a real cluster this is launched via ``spark-submit --py-files
     gos2_spark.zip job.py`` and ``master`` comes from the submit command;
-    locally it defaults to ``local[$SPARK_GRAFT_CPUS]``.
+    locally it defaults to ``local[$SPARK_GRAFT_CPUS]``. The driver heap
+    is sized by :func:`driver_memory`.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+    heap = driver_memory()
 
     # Pin per-worker BLAS/OMP to one thread: each executor core runs its own
     # Python worker, so threaded BLAS inside the numpy kernels oversubscribes
@@ -57,18 +113,17 @@ def get_spark(
         # Local mode: the driver JVM runs every executor thread — size the
         # heap for (cores x partition working set + broadcasts); an 8g heap
         # GC-thrashes at 32 cores and scaling collapses, while an oversized
-        # heap costs real time on this box: pages fault in at ~1.4 GB/s, so
-        # every untouched heap GiB is ~0.7s of mid-job stall. 16g is the
-        # measured sweet spot for the sf0.1 + 2M-page workloads.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # heap costs real time: pages fault in at ~1.4 GB/s, so every
+        # untouched heap GiB is ~0.7s of mid-job stall; hence the 16g cap
+        # in driver_memory().
+        .config("spark.driver.memory", heap)
         # preallocate + pretouch the heap at startup (excluded from bench
         # timings): growing/faulting it lazily under the first full-size
         # Arrow allocation storm showed 74s-vs-3s run variance at local[32].
         # ParallelGCThreads also parallelizes the pretouch itself.
         .config("spark.driver.extraJavaOptions",
-                "-Xms" + os.environ.get("SPARK_DRIVER_MEM", "16g")
-                + " -XX:+UseG1GC -XX:+AlwaysPreTouch -XX:ParallelGCThreads="
-                + str(os.cpu_count() or 8))
+                f"-Xms{heap} -XX:+UseG1GC -XX:+AlwaysPreTouch "
+                f"-XX:ParallelGCThreads={os.cpu_count() or 8}")
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
