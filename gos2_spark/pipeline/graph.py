@@ -1,19 +1,21 @@
 """Link-graph PageRank over web domains (host-level authority scoring for
-crawl prioritization and quality weighting).
+crawl prioritization and quality weighting), and the other iterative
+graph operators that share its round discipline.
 
 Scale shape (10^9 domains, 10^11 edges):
 
 * out-degrees are computed ONCE and joined into the edge table up front,
   so each power iteration is exactly one shuffle-join (ranks on src) plus
   one map-side-combined groupBy (contributions on dst);
-* ranks are re-persisted per iteration and the previous iteration is
-  unpersisted — lineage stays O(1) deep, and ``materialize`` can be swapped
-  for a reliable checkpoint on long chains (same pattern as
-  pipeline.dedup.minhash_dedup_groups);
+* every iterative loop truncates its lineage once per round through the
+  round helpers below (``_truncate`` for fixed-count loops,
+  ``_checkpoint_any`` for loops that stop on a condition): a local
+  checkpoint without a checkpoint dir, a reliable one with it — lineage
+  stays O(1) deep (same policy as pipeline.dedup.minhash_dedup_groups);
 * dangling mass (nodes with no out-edges) is folded into the contribution
   aggregate as a broadcast 1-row total (flowed mass == sum(contrib)) and
-  redistributed uniformly — never a join, never a driver collect: the only
-  action per iteration is the eager materialize;
+  redistributed uniformly — never a join, never a driver collect: with no
+  checkpoint dir an iteration launches no job at all;
 * iteration count is fixed (training-pipeline PageRank runs a handful of
   iterations, not to convergence), which keeps the whole computation a
   statically unrollable DAG — the DuckDB oracle replays it as chained CTEs.
@@ -56,22 +58,60 @@ def _reset_huge_stats(df: DataFrame, bit_limit: int = 128) -> DataFrame:
         return df
 
 
-def _default_materialize(spark):
+BROADCAST_MAX_ROWS = 4_000_000
+
+
+def _default_materialize(spark, eager: bool = True):
     """Per-round lineage truncation for iterative algorithms: RELIABLE
     checkpoint when the SparkContext has a checkpoint dir configured (the
     cluster deployment path — executor loss replays from storage), else
     localCheckpoint (fine on local[*] where executor == driver). Either
     way the result's stats are clamped (see ``_reset_huge_stats``) so
-    per-round estimates cannot compound across rounds."""
+    per-round estimates cannot compound across rounds. ``eager=False``
+    makes the local checkpoint lazy; a reliable one is always eager."""
     reliable = spark.sparkContext.getCheckpointDir() is not None
 
     def _mat(df: DataFrame) -> DataFrame:
         ck = df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
+            eager=eager
         )
         return _reset_huge_stats(ck)
 
     return _mat
+
+
+def _truncate(df: DataFrame) -> DataFrame:
+    """One round of a FIXED-COUNT loop (no per-round driver decision):
+    without a checkpoint dir a LAZY localCheckpoint cuts the plan at once
+    with zero jobs and the whole round chain materializes in the caller's
+    single action; with one, the eager reliable checkpoint."""
+    return _default_materialize(df.sparkSession, eager=False)(df)
+
+
+def _checkpoint_any(df: DataFrame, cond=None) -> tuple[DataFrame, bool]:
+    """One round of a loop that stops on a condition: the truncated frame,
+    and whether any of its rows (matching ``cond``, if given) exists.
+    Without a checkpoint dir this is ONE job — the lazy checkpoint is
+    materialized by the full-scan count (no limit(1): an early-exit scan
+    would leave partitions unmaterialized and the next round would
+    recompute them from the pre-checkpoint lineage). On a graph small
+    enough that per-job overhead dominates, that halves the per-round
+    fixed cost; on a big one the count is a fused scan of data the
+    checkpoint writes anyway."""
+    ck = _truncate(df)
+    probe = ck if cond is None else ck.where(cond)
+    return ck, probe.count() > 0
+
+
+def _broadcast_bounded(df: DataFrame, n: int | None = None) -> DataFrame:
+    """``F.broadcast(df)`` while the side table is provably bounded (at
+    most ``BROADCAST_MAX_ROWS`` rows), else ``df`` for a shuffle join. A
+    checkpointed frame's stats are compound estimates Catalyst cannot
+    trust, so the hint is explicit. ``n`` is a row count the caller
+    already has; without it the gate counts ``df`` (one job)."""
+    if n is None:
+        n = df.count()
+    return F.broadcast(df) if n <= BROADCAST_MAX_ROWS else df
 
 
 def _local_contract(sym: DataFrame) -> DataFrame:
@@ -132,7 +172,6 @@ def connected_components(
     src_col: str = "key_a",
     dst_col: str = "key_b",
     max_iterations: int = 25,
-    materialize=None,
     initial_labels: DataFrame | None = None,
     edges_in_universe: bool = False,
 ) -> DataFrame:
@@ -172,13 +211,12 @@ def connected_components(
 
     ``edges`` is an UNDIRECTED pair list (symmetrized internally and
     materialized once so upstream candidate generation never re-runs).
-    Every round's labels are materialized (reliable checkpoint when the
-    SparkContext has a checkpoint dir — see ``_default_materialize``);
-    the ``_changed`` flag rides the same materialization so convergence
-    detection is a scan, not a second join.
+    Every round's labels are checkpointed (``_checkpoint_any``: reliable
+    when the SparkContext has a checkpoint dir); the ``_changed`` flag
+    rides the same checkpoint, so convergence detection is the count that
+    materializes it, not a second join.
     """
-    spark = nodes.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
+    mat = _default_materialize(nodes.sparkSession)
     sym = mat(
         edges.select(F.col(src_col).alias("key_a"), F.col(dst_col).alias("key_b"))
         .union(
@@ -234,15 +272,15 @@ def connected_components(
                 "key", F.coalesce(F.col("label"), F.col("key")).alias("label")
             )
         )
-        # broadcast the label map while provably bounded (the checkpointed
-        # frame's stats are compound estimates Catalyst cannot trust, so
-        # the hint is explicit); past 4M rows fall back to shuffle joins
-        _b = F.broadcast if lmap.count() <= 4_000_000 else (lambda df: df)
-        ma = _b(
-            lmap.select(F.col("key").alias("key_a"), F.col("label").alias("_la"))
+        # broadcast the label map while provably bounded
+        n_lmap = lmap.count()
+        ma = _broadcast_bounded(
+            lmap.select(F.col("key").alias("key_a"), F.col("label").alias("_la")),
+            n_lmap,
         )
-        mb = _b(
-            lmap.select(F.col("key").alias("key_b"), F.col("label").alias("_lb"))
+        mb = _broadcast_bounded(
+            lmap.select(F.col("key").alias("key_b"), F.col("label").alias("_lb")),
+            n_lmap,
         )
         q_edges = (
             sym.join(ma, "key_a")
@@ -256,7 +294,6 @@ def connected_components(
             q_nodes,
             q_edges,
             max_iterations=max_iterations,
-            materialize=materialize,
             edges_in_universe=True,
         )
         return lmap.join(
@@ -315,28 +352,10 @@ def connected_components(
         .withColumn("label", F.col("key"))
     )
 
-    _fuse_apply = materialize is None and (
-        spark.sparkContext.getCheckpointDir() is None
-    )
-
     def _apply(new_labels: DataFrame) -> tuple[DataFrame, bool]:
         if label_tgt is not None:
             new_labels = new_labels.coalesce(label_tgt)
-        if _fuse_apply:
-            # Fuse the round's two jobs (eager checkpoint, then changed
-            # probe) into ONE: a lazy localCheckpoint is materialized by
-            # the full-scan count below (no limit() — an early-exit scan
-            # would leave partitions unmaterialized and the next round
-            # would recompute them from the pre-checkpoint lineage). On a
-            # graph small enough that per-job overhead dominates, this
-            # halves the per-round fixed cost; on a big graph the count
-            # is a fused scan of data the checkpoint just wrote anyway.
-            ck = new_labels.localCheckpoint(eager=False)
-            changed = ck.where(F.col("_changed")).count() > 0
-            m = _reset_huge_stats(ck)
-        else:
-            m = mat(new_labels)
-            changed = m.where(F.col("_changed")).limit(1).count() > 0
+        m, changed = _checkpoint_any(new_labels, F.col("_changed"))
         return m.drop("_changed"), changed
 
     # One stale-pointer chase step (label of label, through the OLD
@@ -457,7 +476,6 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` damped power iterations.
 
@@ -465,23 +483,17 @@ def pagerank(
     of both endpoints; ranks start uniform at 1/N and sum to 1 after every
     iteration (dangling mass redistributed uniformly).
 
-    Ranks are materialized per iteration (reliable checkpoint when a
-    checkpoint dir is configured — see ``_default_materialize``): without
-    it the per-iteration dangling-mass aggregate would recompute the whole
-    rank lineage from scratch (quadratic total work) and the plan would
-    double per iteration.
+    Ranks are truncated per iteration (``_truncate``): without it the
+    per-iteration dangling-mass aggregate would recompute the whole rank
+    lineage from scratch (quadratic total work) and the plan would double
+    per iteration.
     """
-    spark = edges.sparkSession
-    fused = materialize is None and (
-        spark.sparkContext.getCheckpointDir() is None
-    )
-    if materialize is None:
-        materialize = _default_materialize(spark)
+    mat = _default_materialize(edges.sparkSession)
     # materialize the deduped edge list ONCE: the node-set union, the
     # out-degree join and every iteration otherwise each re-run the
     # caller's edge derivation plus the distinct shuffle (for a corpus
     # co-occurrence graph that is the tokenize + explode of every doc)
-    edges = materialize(
+    edges = mat(
         edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).distinct()
@@ -491,21 +503,20 @@ def pagerank(
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = materialize(nodes)
+    nodes = mat(nodes)
     n = nodes.count()
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     # one join up front; every iteration reuses this weighted edge table
     weighted = edges.join(out_deg, "src").select(
         "src", "dst", (1.0 / F.col("out_deg")).alias("w")
     )
-    weighted = materialize(weighted)
-    # the rank table is n rows: while bounded it rides the per-iteration
-    # join as a broadcast, so the big weighted-edge table never shuffles
-    bcast_ranks = n <= 4_000_000
+    weighted = mat(weighted)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for _ in range(iterations):
-        r = F.broadcast(ranks) if bcast_ranks else ranks
+        # the rank table is n rows: while bounded it rides the join as a
+        # broadcast, so the big weighted-edge table never shuffles
+        r = _broadcast_bounded(ranks, n)
         contrib = (
             weighted.join(r, weighted["src"] == r["node"])
             .groupBy("dst")
@@ -515,7 +526,7 @@ def pagerank(
         # sum to 1, and each src's edge weights sum to 1, so the flowed
         # mass is just sum(contrib)). Folding it in as a broadcast 1-row
         # aggregate removes the per-iteration driver .collect() round 2
-        # ran (the materialize is now the only action). The contrib
+        # ran. The contrib
         # subtree appears in both branches; Catalyst's ReusedExchange
         # makes the second branch a re-read of the same shuffle, not a
         # recompute.
@@ -533,13 +544,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if fused:
-            # fixed iteration count, no per-iteration driver decision: a
-            # lazy checkpoint truncates the plan (clamped stats) and the
-            # whole chain materializes in the caller's single action
-            ranks = _reset_huge_stats(ranks.localCheckpoint(eager=False))
-        else:
-            ranks = materialize(ranks)
+        ranks = _truncate(ranks)
     return ranks
 
 
@@ -548,7 +553,6 @@ def hits(
     iterations: int = 2,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """(node, hub, authority) after ``iterations`` HITS rounds
     (Kleinberg's hubs-and-authorities — the classic link-analysis
@@ -557,10 +561,9 @@ def hits(
     Each half-step is one hash join + one map-side-combined aggregation
     over the distinct edge table; scores are L1-normalized via a
     broadcast single-row total (no driver collect), so per-iteration
-    cost is two bounded shuffles. Same per-iteration materialize
-    discipline as :func:`pagerank` to keep lineage O(1)."""
-    if materialize is None:
-        materialize = _default_materialize(edges.sparkSession)
+    cost is two bounded shuffles. Same per-iteration truncation as
+    :func:`pagerank` to keep lineage O(1)."""
+    mat = _default_materialize(edges.sparkSession)
     edges = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
@@ -569,8 +572,8 @@ def hits(
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = materialize(nodes)
-    edges = materialize(edges)
+    nodes = mat(nodes)
+    edges = mat(edges)
 
     def _l1(df: DataFrame, col: str) -> DataFrame:
         total = df.agg(F.sum(col).alias("_t"))
@@ -587,14 +590,14 @@ def hits(
             .agg(F.sum("hub").alias("auth"))
             .select(F.col("dst").alias("node"), "auth")
         )
-        auth = materialize(_l1(a_raw, "auth"))
+        auth = _truncate(_l1(a_raw, "auth"))
         h_raw = (
             edges.join(auth, edges["dst"] == auth["node"])
             .groupBy("src")
             .agg(F.sum("auth").alias("hub"))
             .select(F.col("src").alias("node"), "hub")
         )
-        hubs = materialize(_l1(h_raw, "hub"))
+        hubs = _truncate(_l1(h_raw, "hub"))
     out = (
         nodes.join(hubs, "node", "left")
         .join(auth, "node", "left")
@@ -694,7 +697,6 @@ def bfs_hops(
     dst_col: str = "dst",
     node_col: str = "node",
     max_hops: int = 20,
-    materialize=None,
 ) -> DataFrame:
     """(node, hops): multi-source BFS shortest hop distance over a directed
     edge table — crawl-frontier depth, link-distance-from-seeds quality
@@ -724,55 +726,54 @@ def bfs_hops(
     The fixed ``max_hops`` cap makes the computation statically unrollable,
     so a recursive-CTE oracle capped at the same depth replays it exactly.
     """
-    spark = edges.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
+    mat = _default_materialize(edges.sparkSession)
     # materialize the deduped edge projection ONCE: every level's plan
     # would otherwise re-run the caller's edge derivation AND the
     # distinct shuffle (measured: the dominant cost of small-graph BFS)
-    e = mat(
-        edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-        .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
+    e = _broadcast_bounded(
+        mat(
+            edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+            .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
+            .distinct()
+        )
     )
-    if e.count() <= 4_000_000:
-        e = F.broadcast(e)
     dist = mat(
         sources.select(F.col(node_col).alias(node_col))
         .distinct()
         .withColumn("hops", F.lit(0).cast("int"))
     )
-    fused = materialize is None and (
-        spark.sparkContext.getCheckpointDir() is None
-    )
-    frontier = dist.select(node_col)
+    return _bfs_levels(e, dist, [node_col], max_hops)
+
+
+def _bfs_levels(
+    e: DataFrame, dist: DataFrame, keys: list[str], max_hops: int
+) -> DataFrame:
+    """The level loop of ``bfs_hops`` and ``closeness_from_seeds``.
+
+    ``e`` is the (_s, _d) edge table and ``dist`` the hop-0 rows
+    (*keys, hops). The last key is the node; leading keys (closeness's
+    ``seed``) tag independent searches that ride the same keyed join and
+    anti-join. Each level is ONE job — the new frontier's checkpoint
+    fused with its emptiness test — and the visited set truncates with
+    no job, since no driver decision reads it.
+    """
+    *tag, node = keys
+    frontier = dist.select(*keys)
     for h in range(1, max_hops + 1):
         reached = (
-            frontier.join(e, frontier[node_col] == e["_s"])
-            .select(F.col("_d").alias(node_col))
+            frontier.join(e, frontier[node] == e["_s"])
+            .select(*tag, F.col("_d").alias(node))
             .distinct()
         )
-        new_plan = reached.join(dist, node_col, "left_anti").withColumn(
-            "hops", F.lit(h).cast("int")
-        )
-        if fused:
-            # ONE job per level: the lazy checkpoint is materialized by
-            # the emptiness probe's full count (CC _apply precedent)
-            ck = new_plan.localCheckpoint(eager=False)
-            empty = ck.count() == 0
-            new = _reset_huge_stats(ck)
-        else:
-            new = mat(new_plan)
-            empty = new.isEmpty()
-        if empty:
-            break
-        if fused:
-            # no driver decision reads dist: truncate lazily, zero jobs
-            dist = _reset_huge_stats(
-                dist.union(new).localCheckpoint(eager=False)
+        new, nonempty = _checkpoint_any(
+            reached.join(dist, keys, "left_anti").withColumn(
+                "hops", F.lit(h).cast("int")
             )
-        else:
-            dist = mat(dist.union(new))
-        frontier = new.select(node_col)
+        )
+        if not nonempty:
+            break
+        dist = _truncate(dist.union(new))
+        frontier = new.select(*keys)
     return dist
 
 
@@ -784,7 +785,6 @@ def sssp_relax(
     weight_col: str = "w",
     node_col: str = "node",
     rounds: int = 8,
-    materialize=None,
 ) -> DataFrame:
     """(node, cost): multi-source shortest path cost after ``rounds``
     Bellman-Ford relaxation sweeps — weighted link distance, crawl cost
@@ -805,26 +805,22 @@ def sssp_relax(
     replays it exactly — and with integer weights every cost compares
     exactly cross-engine.
     """
-    spark = edges.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
+    mat = _default_materialize(edges.sparkSession)
     # materialize the edge table ONCE: every sweep's plan would otherwise
     # embed (and re-run) the caller's full edge derivation
-    e = mat(
-        edges.select(
-            F.col(src_col).alias("_s"),
-            F.col(dst_col).alias("_d"),
-            F.col(weight_col).alias("_w"),
-        ).where(F.col("_w") >= 0)
+    e = _broadcast_bounded(
+        mat(
+            edges.select(
+                F.col(src_col).alias("_s"),
+                F.col(dst_col).alias("_d"),
+                F.col(weight_col).alias("_w"),
+            ).where(F.col("_w") >= 0)
+        )
     )
-    if e.count() <= 4_000_000:
-        e = F.broadcast(e)
     dist = mat(
         sources.select(F.col(node_col).alias(node_col))
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
-    )
-    fused = materialize is None and (
-        spark.sparkContext.getCheckpointDir() is None
     )
     for _ in range(rounds):
         cand = dist.join(e, dist[node_col] == e["_s"]).select(
@@ -834,14 +830,7 @@ def sssp_relax(
         new_dist = dist.union(cand).groupBy(node_col).agg(
             F.min("cost").alias("cost")
         )
-        if fused:
-            # fixed round count, no per-round driver decision: a LAZY
-            # checkpoint truncates the plan immediately (LogicalRDD) with
-            # clamped stats, and the whole sweep chain materializes in
-            # the caller's single action — zero jobs per round
-            dist = _reset_huge_stats(new_dist.localCheckpoint(eager=False))
-        else:
-            dist = mat(new_dist)
+        dist = _truncate(new_dist)
     return dist
 
 
@@ -850,7 +839,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     rounds: int = 3,
-    materialize=None,
 ) -> DataFrame:
     """(node, label, community_size): synchronous label-propagation
     community detection over an undirected view of the edge table —
@@ -869,12 +857,11 @@ def label_propagation(
     Scale shape (10^9 nodes, 10^11 edges): per round ONE shuffle join
     (labels onto edge sources) + one map-side-combined (node, label)
     count + one keyed max-by rank — all co-partitionable on the node key;
-    lineage truncates per round via ``materialize``. The rank uses a
+    lineage truncates per round (``_truncate``). The rank uses a
     two-column max-struct agg, not a window, so a hub node's votes
     aggregate tree-wise instead of funneling one partition.
     """
-    spark = edges.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
+    mat = _default_materialize(edges.sparkSession)
     e0 = edges.select(
         F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
     ).where(F.col(src_col) != F.col(dst_col))
@@ -893,7 +880,7 @@ def label_propagation(
                 "_b"
             )
         ).select("node", (-F.col("_b._nl")).alias("_new"))
-        labels = mat(
+        labels = _truncate(
             labels.join(best, "node", "left").select(
                 "node", F.coalesce("_new", "label").alias("label")
             )
@@ -908,7 +895,6 @@ def kcore(
     rounds: int = 6,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """(node, core_deg): iterative k-core peeling over an undirected view
     of the edge table — the standard dense-subgraph extractor (spam-farm
@@ -927,12 +913,12 @@ def kcore(
     keyed on node ids; the active set only shrinks, so per-round cost is
     bounded by the surviving subgraph, and lineage truncates per round.
     """
-    spark = edges.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
     e0 = edges.select(
         F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
     ).where(F.col(src_col) != F.col(dst_col))
-    e = mat(e0.union(e0.select(F.col("_d"), F.col("_s"))).distinct())
+    e = _default_materialize(edges.sparkSession)(
+        e0.union(e0.select(F.col("_d"), F.col("_s"))).distinct()
+    )
     active = e.select(F.col("_s").alias("node")).distinct()
     deg = None
     for _ in range(rounds):
@@ -942,9 +928,7 @@ def kcore(
         deg = ea.groupBy(F.col("_s").alias("node")).agg(
             F.count("*").alias("core_deg")
         )
-        active = mat(
-            deg.where(F.col("core_deg") >= k).select("node")
-        )
+        active = _truncate(deg.where(F.col("core_deg") >= k).select("node"))
     ea = e.join(
         active.select(F.col("node").alias("_s")), "_s", "left_semi"
     ).join(active.select(F.col("node").alias("_d")), "_d", "left_semi")
@@ -1045,7 +1029,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """Personalized PageRank: the teleport vector (and the dangling
     mass) concentrates on ``seed`` instead of spreading uniformly — the
@@ -1056,10 +1039,9 @@ def personalized_pagerank(
                                            + dangling * [v == seed])
 
     Same plan shape as ``pagerank`` (one weighted edge table reused
-    across iterations, per-iteration materialize, dangling mass folded
+    across iterations, per-iteration truncation, dangling mass folded
     in as a broadcast 1-row aggregate — no driver collect)."""
-    if materialize is None:
-        materialize = _default_materialize(edges.sparkSession)
+    mat = _default_materialize(edges.sparkSession)
     edges = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
@@ -1068,12 +1050,12 @@ def personalized_pagerank(
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = materialize(nodes)
+    nodes = mat(nodes)
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     weighted = edges.join(out_deg, "src").select(
         "src", "dst", (1.0 / F.col("out_deg")).alias("w")
     )
-    weighted = materialize(weighted)
+    weighted = mat(weighted)
 
     is_seed = (F.col("node") == F.lit(seed)).cast("double")
     ranks = nodes.withColumn("rank", is_seed)
@@ -1098,7 +1080,7 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        ranks = materialize(ranks)
+        ranks = _truncate(ranks)
     return ranks
 
 
@@ -1108,7 +1090,6 @@ def closeness_from_seeds(
     max_hops: int = 8,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """(node, n_seeds_reached, total_hops, harmonic_e9, closeness):
     seed-anchored closeness / harmonic centrality — 'how close is every
@@ -1138,48 +1119,20 @@ def closeness_from_seeds(
     table is k-bounded per node.
     """
     spark = edges.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
-    e = mat(
-        edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-        .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
+    mat = _default_materialize(spark)
+    e = _broadcast_bounded(
+        mat(
+            edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+            .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
+            .distinct()
+        )
     )
-    if e.count() <= 4_000_000:
-        e = F.broadcast(e)
     dist = mat(
         spark.createDataFrame(
             [(int(s), int(s)) for s in seed_ids], "seed long, node long"
         ).withColumn("hops", F.lit(0).cast("int"))
     )
-    fused = materialize is None and (
-        spark.sparkContext.getCheckpointDir() is None
-    )
-    frontier = dist.select("seed", "node")
-    for h in range(1, max_hops + 1):
-        reached = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select("seed", F.col("_d").alias("node"))
-            .distinct()
-        )
-        new_plan = reached.join(dist, ["seed", "node"], "left_anti").withColumn(
-            "hops", F.lit(h).cast("int")
-        )
-        if fused:
-            ck = new_plan.localCheckpoint(eager=False)
-            empty = ck.count() == 0
-            new = _reset_huge_stats(ck)
-        else:
-            new = mat(new_plan)
-            empty = new.isEmpty()
-        if empty:
-            break
-        if fused:
-            dist = _reset_huge_stats(
-                dist.union(new).localCheckpoint(eager=False)
-            )
-        else:
-            dist = mat(dist.union(new))
-        frontier = new.select("seed", "node")
+    dist = _bfs_levels(e, dist, ["seed", "node"], max_hops)
     allh = dist.select("node", "hops")
     inv_e9 = F.when(
         F.col("hops") > 0,
@@ -1212,7 +1165,6 @@ def ktruss_edges(
     rounds: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """(a, b, support): the k-truss of an undirected graph — edges whose
     every survivor round keeps triangle support >= k-2 (every edge in a
@@ -1232,12 +1184,10 @@ def ktruss_edges(
     All counts BIGINT; output is the canonical a < b edge list with the
     final-round support.
     """
-    spark = edges.sparkSession
-    mat = materialize if materialize is not None else _default_materialize(spark)
     e0 = edges.select(
         F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
     ).where(F.col(src_col) != F.col(dst_col))
-    und = mat(
+    und = _default_materialize(edges.sparkSession)(
         e0.select(
             F.least("_s", "_d").alias("a"), F.greatest("_s", "_d").alias("b")
         ).distinct()
@@ -1255,7 +1205,7 @@ def ktruss_edges(
 
     for _ in range(rounds):
         sup = _support(und)
-        und = mat(
+        und = _truncate(
             und.join(sup, ["a", "b"], "left")
             .where(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("a", "b")
@@ -1414,7 +1364,6 @@ def katz_centrality(
     alpha: float = 0.125,
     src: str = "src",
     dst: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """Katz centrality after ``iterations`` truncated power steps —
     the walk-counting member of the centrality family (PageRank
@@ -1433,18 +1382,17 @@ def katz_centrality(
     map-side-combined aggregation per iteration on a reused edge table
     (the pagerank iteration shape), never a driver loop.
     """
-    if materialize is None:
-        materialize = _default_materialize(edges.sparkSession)
+    mat = _default_materialize(edges.sparkSession)
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).distinct()
-    e = materialize(e)
+    e = mat(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = materialize(nodes)
+    nodes = mat(nodes)
     x = nodes.withColumn("katz", F.lit(1.0))
     a = float(alpha)
     for _ in range(iterations):
@@ -1463,7 +1411,7 @@ def katz_centrality(
                 ).alias("katz"),
             )
         )
-        x = materialize(x)
+        x = _truncate(x)
     return x
 
 
@@ -1472,7 +1420,6 @@ def eigenvector_centrality(
     iterations: int = 4,
     src: str = "src",
     dst: str = "dst",
-    materialize=None,
 ) -> DataFrame:
     """Eigenvector centrality by truncated power iteration with the
     normalization DEFERRED to the end:
@@ -1495,18 +1442,17 @@ def eigenvector_centrality(
 
     Output: (node, walks, score).
     """
-    if materialize is None:
-        materialize = _default_materialize(edges.sparkSession)
+    mat = _default_materialize(edges.sparkSession)
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).distinct()
-    e = materialize(e)
+    e = mat(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    nodes = materialize(nodes)
+    nodes = mat(nodes)
     x = nodes.withColumn("w", F.lit(1).cast("long"))
     for _ in range(iterations):
         inc = (
@@ -1517,7 +1463,7 @@ def eigenvector_centrality(
         x = nodes.join(inc, nodes["node"] == inc["dst"], "left").select(
             "node", F.coalesce(F.col("_in"), F.lit(0)).cast("long").alias("w")
         )
-        x = materialize(x)
+        x = _truncate(x)
     norm = x.agg(F.sum(F.col("w") * F.col("w")).alias("_n2"))
     return (
         x.crossJoin(F.broadcast(norm))

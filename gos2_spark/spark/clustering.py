@@ -108,7 +108,11 @@ def _dbscan_from_pairs(
     checkpointed frames carry compound size estimates Catalyst cannot
     see through, so the hint is the measurement-backed decision, not a
     local[32] hack."""
-    from ..pipeline.graph import _default_materialize, connected_components
+    from ..pipeline.graph import (
+        _broadcast_bounded,
+        _default_materialize,
+        connected_components,
+    )
 
     keys = points.select(F.col(point_key).alias("key"))
     mat = _default_materialize(points.sparkSession)
@@ -129,10 +133,10 @@ def _dbscan_from_pairs(
         core = mat(
             deg.where(F.col("n_nbrs") >= min_pts - 1).select("key")
         )
-    bcast_ok = core.count() <= 4_000_000
+    n_core = core.count()
 
     def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if bcast_ok else df
+        return _broadcast_bounded(df, n_core)
 
     if contract_exprs:
         gcols = [f"_g{i}" for i in range(len(contract_exprs))]

@@ -1,9 +1,9 @@
 """Adaptive density tiling: choose a per-region S2 cell level so every
 emitted tile holds at most ``threshold`` points (or sits at ``max_level``).
 
-This is the "adaptive cell-level splitting" companion to the hot-cell skew
-machinery in :mod:`gos2_spark.spark.skew` — instead of splitting join keys,
-it materializes the variable-resolution tile set itself (dense urban areas
+This is the "adaptive cell-level splitting" primitive: instead of splitting
+hot join keys (AQE's skew-join splitting does that at run time), it
+materializes the variable-resolution tile set itself (dense urban areas
 get fine cells, oceans get coarse ones), the standard web-scale heatmap /
 load-balancing primitive.
 

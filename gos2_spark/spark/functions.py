@@ -18,7 +18,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, LongType, StringType,
+    ArrayType, DoubleType, LongType, StringType,
 )
 
 from ..kernels import hilbert as H
@@ -56,40 +56,11 @@ def s2_cellid(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.Series:
     return _to_biased(ids)
 
 
-@pandas_udf(LongType())
-def s2_cellid_at(lat_deg: pd.Series, lng_deg: pd.Series, level: pd.Series) -> pd.Series:
-    """Cell at a given level containing the point (leaf + Parent)."""
-    ids = PJ.cellid_from_latlng(lat_deg.to_numpy(np.float64), lng_deg.to_numpy(np.float64))
-    return _to_biased(H.parent(ids, level.to_numpy(np.int64)))
-
-
 # --- hierarchy (pure bit arithmetic — also [SQL]-expressible) ---------------
 
 @pandas_udf(LongType())
 def s2_parent(cell: pd.Series, level: pd.Series) -> pd.Series:
     return _to_biased(H.parent(_to_u64(cell), level.to_numpy(np.int64)))
-
-
-@pandas_udf(IntegerType())
-def s2_level(cell: pd.Series) -> pd.Series:
-    return pd.Series(H.level(_to_u64(cell)))
-
-
-@pandas_udf(LongType())
-def s2_range_min(cell: pd.Series) -> pd.Series:
-    return _to_biased(H.range_min(_to_u64(cell)))
-
-
-@pandas_udf(LongType())
-def s2_range_max(cell: pd.Series) -> pd.Series:
-    return _to_biased(H.range_max(_to_u64(cell)))
-
-
-@pandas_udf(ArrayType(LongType()))
-def s2_children(cell: pd.Series) -> pd.Series:
-    ch = H.children(_to_u64(cell))
-    biased = (ch ^ _BIAS).view(np.int64)
-    return pd.Series(list(biased))
 
 
 @pandas_udf(ArrayType(LongType()))
@@ -137,21 +108,6 @@ def s2_cell_lat(cell: pd.Series) -> pd.Series:
 def s2_cell_lng(cell: pd.Series) -> pd.Series:
     _, lng = PJ.cellid_to_latlng(_to_u64(cell))
     return pd.Series(lng)
-
-
-@pandas_udf(DoubleType())
-def s2_distance_rad(
-    lat1: pd.Series, lng1: pd.Series, lat2: pd.Series, lng2: pd.Series
-) -> pd.Series:
-    """Great-circle angle via Vector.Angle semantics (point.go:328-330) —
-    the distance the reference uses for point work (kNN parity)."""
-    x1, y1, z1 = PJ.latlng_to_xyz(
-        np.radians(lat1.to_numpy(np.float64)), np.radians(lng1.to_numpy(np.float64))
-    )
-    x2, y2, z2 = PJ.latlng_to_xyz(
-        np.radians(lat2.to_numpy(np.float64)), np.radians(lng2.to_numpy(np.float64))
-    )
-    return pd.Series(PJ.point_angle(x1, y1, z1, x2, y2, z2))
 
 
 def add_cellid_sql(df, lat_col: str, lng_col: str, out_col: str = "cell_id"):

@@ -222,7 +222,6 @@ def hex_flow_accumulation(
     cells: DataFrame,
     elev_col: str = "elev",
     max_steps: int = 16,
-    materialize=None,
 ) -> DataFrame:
     """Flow accumulation over the D6 steepest-descent drainage graph —
     the second half of the hex hydrology kernel (after
@@ -250,58 +249,46 @@ def hex_flow_accumulation(
 
     Output: (hq, hr, elev, flow_dir, is_sink, flow_acc).
     """
-    fused0 = materialize is None
-    flow = hex_flow_directions(cells, elev_col)
+    from ..pipeline.graph import (
+        _broadcast_bounded,
+        _checkpoint_any,
+        _default_materialize,
+    )
+
+    mat = _default_materialize(cells.sparkSession)
     # flow feeds three consumers (the next-cell table, the initial token
     # frame, and the final join) — materialize it once or each one
     # re-runs the hexbin aggregation + D6 neighbor join upstream
-    flow = (
-        flow.localCheckpoint(eager=True) if fused0 else materialize(flow)
-    )
+    flow = mat(hex_flow_directions(cells, elev_col))
     dq = F.element_at(
         F.array(*[F.lit(d) for d, _ in _HEX_DIRS]), F.col("flow_dir") + 1
     )
     dr = F.element_at(
         F.array(*[F.lit(d) for _, d in _HEX_DIRS]), F.col("flow_dir") + 1
     )
-    nxt = flow.where(~F.col("is_sink")).select(
-        "hq",
-        "hr",
-        (F.col("hq") + dq).alias("_nq"),
-        (F.col("hr") + dr).alias("_nr"),
-    )
-    fused = materialize is None
-    if materialize is None:
-        def materialize(df):
-            return df.localCheckpoint(eager=True)
-    nxt = materialize(nxt)
     # the next-cell table is bounded by the OCCUPIED cell count; while
     # small it rides every round's join as a broadcast, so a round is one
     # map-side job (join + partial agg) instead of a shuffle join
-    if nxt.count() <= 4_000_000:
-        nxt = F.broadcast(nxt)
+    nxt = _broadcast_bounded(
+        mat(
+            flow.where(~F.col("is_sink")).select(
+                "hq",
+                "hr",
+                (F.col("hq") + dq).alias("_nq"),
+                (F.col("hr") + dr).alias("_nr"),
+            )
+        )
+    )
     moving = flow.select("hq", "hr", F.lit(1).cast("long").alias("w"))
     arrivals = moving
     for _ in range(max_steps):
-        moving = (
+        # ONE job per round: the checkpoint fused with the emptiness test
+        moving, moved = _checkpoint_any(
             moving.join(nxt, ["hq", "hr"])
-            .groupBy(
-                F.col("_nq").alias("hq"), F.col("_nr").alias("hr")
-            )
+            .groupBy(F.col("_nq").alias("hq"), F.col("_nr").alias("hr"))
             .agg(F.sum("w").alias("w"))
         )
-        if fused:
-            # ONE job per round: the lazy checkpoint is materialized by
-            # the emptiness probe's full count (a limit(1) scan would
-            # leave partitions unmaterialized and the next round would
-            # recompute from the pre-checkpoint lineage — the CC _apply
-            # precedent)
-            moving = moving.localCheckpoint(eager=False)
-            empty = moving.count() == 0
-        else:
-            moving = materialize(moving)
-            empty = moving.isEmpty()
-        if empty:
+        if not moved:
             break
         arrivals = arrivals.union(moving)
     acc = arrivals.groupBy("hq", "hr").agg(F.sum("w").alias("flow_acc"))

@@ -782,6 +782,7 @@ def knn_join_df(
     from pyspark.sql.window import Window
 
     from ..geometry.metric import MIN_WIDTH
+    from ..pipeline.graph import _default_materialize
     from .functions import s2_neighborhood
 
     spark = points.sparkSession
@@ -1018,13 +1019,15 @@ def knn_join_df(
     # session (the round-2 version leaked up to max_rounds persisted
     # ranked frames per call; a per-round checkpoint variant cost two
     # extra jobs per round — this is the cheap point to materialize).
-    # The checkpoint blocks themselves are freed by the ContextCleaner
-    # when the caller drops the result.
+    # It is a reliable checkpoint when a checkpoint dir is configured
+    # (``_default_materialize``); local checkpoint blocks are freed by
+    # the ContextCleaner when the caller drops the result.
     # the result is bounded (<= queries*k rows) but unioned from
     # shuffle-partitioned parts: coalesce narrows the checkpoint job's
     # task count (and the caller's downstream scans) ~8x for free
-    out = out.coalesce(max(2, spark.sparkContext.defaultParallelism // 8))
-    out = out.localCheckpoint(eager=True)
+    out = _default_materialize(spark)(
+        out.coalesce(max(2, spark.sparkContext.defaultParallelism // 8))
+    )
     for df in intermediates:
         df.unpersist()
     if own_cache:

@@ -1,25 +1,14 @@
-"""Checkpointed runner (resume + manifests) and skew-handling tests."""
+"""Checkpointed runner (resume + manifests), sources and skewed-input tests."""
 
 import json
 import os
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from gos2_spark.kernels import hilbert as H
 from gos2_spark.spark.checkpoint import CheckpointedRunner, lineage_hash
 from gos2_spark.spark.pages import geoparsed_pages, synth_pages
-from gos2_spark.spark.skew import (
-    cell_histogram, salted_group_count, split_hot_cells,
-)
-
-
-@pytest.fixture(scope="module")
-def points(spark):
-    df = geoparsed_pages(synth_pages(spark, 3000), keep=("url", "lang")).cache()
-    df.count()
-    return df
 
 
 def test_checkpoint_runner_resume(spark, tmp_path):
@@ -56,40 +45,6 @@ def test_checkpoint_runner_resume(spark, tmp_path):
     metrics = runner2.metrics()
     assert {m["partition_id"] for m in metrics} == {"a", "b"}
     assert all(m["rows_out"] == 500 for m in metrics)
-
-
-def test_cell_histogram(points):
-    hist = cell_histogram(points, 10)
-    total = hist.agg(F.sum("n")).collect()[0][0]
-    assert total == points.count()
-    hot = [r["cell"] for r in hist.where(F.col("n") >= 0.02 * total).collect()]
-    # the city mixture concentrates ~40% of rows into a few cells
-    assert len(hot) >= 1
-    # every hot cell is a valid level-10 biased id
-    raw = H.from_signed(np.array(hot, dtype=np.int64))
-    assert (H.level(raw) == 10).all()
-
-
-def test_split_hot_cells():
-    base = int(H.parent(np.array([0x47A1CBD595522B39], dtype=np.uint64), 10)[0])
-    out = split_hot_cells([base], {base}, extra_levels=2)
-    assert len(out) == 16
-    arr = np.array(out, dtype=np.uint64)
-    assert (H.level(arr) == 12).all()
-    assert (H.parent(arr, 10) == base).all()
-    # non-hot cells pass through
-    assert split_hot_cells([base], set(), 2) == [base]
-
-
-def test_salted_group_count_matches_plain(points):
-    plain = {
-        r["lang"]: r["n"]
-        for r in points.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    salted = {
-        r["lang"]: r["count"] for r in salted_group_count(points, "lang").collect()
-    }
-    assert plain == salted
 
 
 def test_pages_source_fallback_roundtrip(spark, tmp_path):

@@ -1,4 +1,8 @@
-"""edit_distance_pairs blocking join + Holt pair-state fold sanity."""
+"""edit_distance_pairs blocking join + Holt pair-state fold sanity, and
+the checkpoint-dir durability policy."""
+
+import contextlib
+import os
 
 import pytest
 
@@ -88,8 +92,6 @@ def test_dedup_materialization_honors_checkpoint_dir(spark, tmp_path):
     checkpoint dir configured they take a RELIABLE checkpoint (files on
     disk, survivable on executor loss) instead of the local-only
     localCheckpoint, and results are unchanged."""
-    import os
-
     from gos2_spark.pipeline.dedup import (
         containment_join,
         edit_distance_pairs,
@@ -105,9 +107,7 @@ def test_dedup_materialization_honors_checkpoint_dir(spark, tmp_path):
         "doc_id long, text string",
     )
     ckdir = str(tmp_path / "ck")
-    sc = spark.sparkContext
-    sc.setCheckpointDir(ckdir)
-    try:
+    with _checkpoint_dir(spark, ckdir):
         pairs = {
             (r.key_a, r.key_b)
             for r in edit_distance_pairs(
@@ -117,14 +117,74 @@ def test_dedup_materialization_honors_checkpoint_dir(spark, tmp_path):
         jj = jaccard_join(docs, threshold=0.5).collect()
         cj = containment_join(docs, threshold=0.5).collect()
         # the reliable checkpoint actually wrote to the configured dir
-        wrote = any(files for _, _, files in os.walk(ckdir))
-        assert wrote, "no reliable checkpoint files written"
+        assert _wrote(ckdir), "no reliable checkpoint files written"
+    assert (1, 2) in pairs
+    assert {(r.key_a, r.key_b) for r in jj} == {(1, 2)}
+    assert any(r.key_a == 1 and r.key_b == 2 for r in cj)
+
+
+@contextlib.contextmanager
+def _checkpoint_dir(spark, path):
+    sc = spark.sparkContext
+    sc.setCheckpointDir(path)
+    try:
+        yield
     finally:
         # un-set so later tests keep the localCheckpoint default (the
         # scala setter name needs getattr because of the $ in it)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(
             sc._jvm.scala.Option.empty()
         )
-    assert (1, 2) in pairs
-    assert {(r.key_a, r.key_b) for r in jj} == {(1, 2)}
-    assert any(r.key_a == 1 and r.key_b == 2 for r in cj)
+
+
+def _wrote(path):
+    return any(files for _, _, files in os.walk(path))
+
+
+def _hex_flow(spark):
+    from gos2_spark.spark.hexgrid import hex_flow_accumulation
+
+    cells = spark.createDataFrame(
+        [(q, r, (7 * q + 3 * r) % 11) for q in range(3) for r in range(4)],
+        "hq long, hr long, elev long",
+    )
+    return hex_flow_accumulation(cells, max_steps=4)
+
+
+def _bfs(spark):
+    from gos2_spark.pipeline.graph import bfs_hops
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)] + [(0, 2), (9, 10)],
+        "src long, dst long",
+    )
+    return bfs_hops(
+        edges, spark.createDataFrame([(0,)], "node long"), max_hops=5
+    )
+
+
+def _cc(spark):
+    from gos2_spark.pipeline.graph import connected_components
+
+    nodes = spark.range(12).withColumnRenamed("id", "key")
+    edges = spark.createDataFrame(
+        [(i, i + 3) for i in range(0, 8, 2)], "key_a long, key_b long"
+    )
+    return connected_components(nodes, edges)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_hex_flow, _bfs, _cc],
+    ids=["hex_flow_accumulation", "bfs_hops", "connected_components"],
+)
+def test_iterative_loops_honor_checkpoint_dir(spark, tmp_path, build):
+    """The iterative loops take the same policy: with a checkpoint dir
+    configured their rounds write reliable checkpoints there, and the
+    rows equal the no-dir run's."""
+    want = sorted(build(spark).collect())
+    ckdir = str(tmp_path / "ck")
+    with _checkpoint_dir(spark, ckdir):
+        got = sorted(build(spark).collect())
+        assert _wrote(ckdir), "no reliable checkpoint files written"
+    assert want and got == want
