@@ -319,7 +319,6 @@ def from_token(tokens) -> np.ndarray:
 
 # --- scalar fast paths (driver-side Cell/coverer: avoid 1-element numpy) ----
 
-_LOOKUP_POS_LIST = [int(x) for x in LOOKUP_POS]
 _LOOKUP_IJ_LIST = [int(x) for x in LOOKUP_IJ]
 
 
@@ -340,20 +339,6 @@ def face_ij_orientation_scalar(cid: int) -> tuple[int, int, int, int]:
     if (cid & (-cid)) & 0x1111111111111110:
         bits ^= SWAP_MASK
     return f, i, j, bits
-
-
-def cellid_from_face_ij_scalar(f: int, i: int, j: int) -> int:
-    """Scalar Hilbert encode (cellid.go:416-438)."""
-    n = f << (POS_BITS - 1)
-    bits = f & SWAP_MASK
-    mask = (1 << LOOKUP_BITS) - 1
-    for k in range(7, -1, -1):
-        bits += ((i >> (k * LOOKUP_BITS)) & mask) << (LOOKUP_BITS + 2)
-        bits += ((j >> (k * LOOKUP_BITS)) & mask) << 2
-        bits = _LOOKUP_POS_LIST[bits]
-        n |= (bits >> 2) << (k * 2 * LOOKUP_BITS)
-        bits &= SWAP_MASK | INVERT_MASK
-    return n * 2 + 1
 
 
 def level_scalar(cid: int) -> int:

@@ -266,12 +266,6 @@ def ij_level_to_bound_uv(i, j, lvl):
     )
 
 
-def cellid_bound_uv(ids):
-    """uv bounding rect of each cell."""
-    _, i, j, _ = hilbert.face_ij_orientation(ids)
-    return ij_level_to_bound_uv(i.astype(np.int64), j.astype(np.int64), hilbert.level(ids))
-
-
 # --- neighbors (cellid.go:210-287, 440-477) ----------------------------------
 
 def _cellid_from_face_ij_wrap(f, i, j):

@@ -115,11 +115,13 @@ def minhash_lsh_candidates(
     inputs skip the exchange (shuffling 100 TB of raw text for no
     parallelism gain would dominate the job).
     """
+    from ..spark.functions import widen_to_parallelism
+
     rows_per_band = num_perm // bands
-    narrow = docs.select(F.col(key_col).alias("key"), F.col(text_col).alias("_txt"))
-    slots = docs.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < max(2, slots // 2):
-        narrow = narrow.repartition(slots)
+    narrow = widen_to_parallelism(
+        docs.select(F.col(key_col).alias("key"), F.col(text_col).alias("_txt")),
+        min_bytes=0,
+    )
     sig = narrow.select(
         "key",
         minhash_signature(shingle_hashes(F.col("_txt"), shingle_n), num_perm).alias("sig"),
@@ -607,10 +609,10 @@ def edit_distance_pairs(
     titles, or the shared title when equal), and the distance is a
     function of the titles alone.
     """
+    from ..spark.functions import widen_to_parallelism
     from .graph import _default_materialize
 
     spark = docs.sparkSession
-    slots = spark.sparkContext.defaultParallelism
     # one eager checkpoint: the narrow (key, title, blk) frame feeds the
     # over-full-block scan, its anti-join, the distinct-title build and
     # the key-expansion sides — scan the corpus once (see jaccard_join's
@@ -620,9 +622,7 @@ def edit_distance_pairs(
         F.col(key_col).alias("key"),
         F.lower(F.substring(text_col, 1, title_len)).alias("title"),
     ).withColumn("blk", F.substring("title", 1, prefix_len))
-    if t.rdd.getNumPartitions() < max(2, slots // 2):
-        t = t.repartition(slots)
-    t = _default_materialize(spark)(t)
+    t = _default_materialize(spark)(widen_to_parallelism(t, min_bytes=0))
     if bucket_cap is not None:
         over = (
             t.groupBy("blk")

@@ -108,8 +108,11 @@ def _broadcast_bounded(df: DataFrame, n: int | None = None) -> DataFrame:
     most ``BROADCAST_MAX_ROWS`` rows), else ``df`` for a shuffle join. A
     checkpointed frame's stats are compound estimates Catalyst cannot
     trust, so the hint is explicit. ``n`` is a row count the caller
-    already has; without it the gate counts ``df`` (one job)."""
+    already has. Without it the side table is truncated (``_truncate``)
+    and counted: without a checkpoint dir the count is the only action,
+    and it also materializes the lazy checkpoint every round then reads."""
     if n is None:
+        df = _truncate(df)
         n = df.count()
     return F.broadcast(df) if n <= BROADCAST_MAX_ROWS else df
 
@@ -731,11 +734,9 @@ def bfs_hops(
     # would otherwise re-run the caller's edge derivation AND the
     # distinct shuffle (measured: the dominant cost of small-graph BFS)
     e = _broadcast_bounded(
-        mat(
-            edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-            .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-            .distinct()
-        )
+        edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+        .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
+        .distinct()
     )
     dist = mat(
         sources.select(F.col(node_col).alias(node_col))
@@ -809,13 +810,11 @@ def sssp_relax(
     # materialize the edge table ONCE: every sweep's plan would otherwise
     # embed (and re-run) the caller's full edge derivation
     e = _broadcast_bounded(
-        mat(
-            edges.select(
-                F.col(src_col).alias("_s"),
-                F.col(dst_col).alias("_d"),
-                F.col(weight_col).alias("_w"),
-            ).where(F.col("_w") >= 0)
-        )
+        edges.select(
+            F.col(src_col).alias("_s"),
+            F.col(dst_col).alias("_d"),
+            F.col(weight_col).alias("_w"),
+        ).where(F.col("_w") >= 0)
     )
     dist = mat(
         sources.select(F.col(node_col).alias(node_col))
@@ -1121,11 +1120,9 @@ def closeness_from_seeds(
     spark = edges.sparkSession
     mat = _default_materialize(spark)
     e = _broadcast_bounded(
-        mat(
-            edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
-            .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-            .distinct()
-        )
+        edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
+        .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
+        .distinct()
     )
     dist = mat(
         spark.createDataFrame(

@@ -153,7 +153,7 @@ def simple_kriging_3nn(
     for exact-tie determinism), pivot rank->columns with three
     conditional firsts, then pure expressions. At planet scale with a
     LARGE target set, feed the neighbor stage from
-    ``spark.joins.knn_join_df`` (cap-doubling cell ladder) instead of
+    ``spark.joins.knn_join_df`` (cell-level ladder) instead of
     the broadcast product; the solve stage is unchanged.
 
     The global mean is ``sum(value)/count`` — callers should supply an

@@ -270,13 +270,11 @@ def hex_flow_accumulation(
     # small it rides every round's join as a broadcast, so a round is one
     # map-side job (join + partial agg) instead of a shuffle join
     nxt = _broadcast_bounded(
-        mat(
-            flow.where(~F.col("is_sink")).select(
-                "hq",
-                "hr",
-                (F.col("hq") + dq).alias("_nq"),
-                (F.col("hr") + dr).alias("_nr"),
-            )
+        flow.where(~F.col("is_sink")).select(
+            "hq",
+            "hr",
+            (F.col("hq") + dq).alias("_nq"),
+            (F.col("hr") + dr).alias("_nr"),
         )
     )
     moving = flow.select("hq", "hr", F.lit(1).cast("long").alias("w"))

@@ -11,8 +11,10 @@ crossing-parity kernel over Arrow batches). Parity anchors:
   single-level grid plus a leaf-range predicate on bias-encoded ids;
 - refinement == Loop.Contains crossing parity (loop.go:532-558) seeded with
   the broadcast origin_inside;
-- kNN == cap-doubling coverings (cap.go:294-299) + exact angle distances
-  (point.go:328-330) + deterministic (dist, cell_id, url) tie-break.
+- kNN == 3x3 cell-block rounds with the MinWidth finish guarantee
+  (metric.go:44-54), or one face-blocked cross join while queries x points
+  is small, + exact angle distances (point.go:328-330) + deterministic
+  (dist, key) tie-break.
 """
 
 from __future__ import annotations
@@ -523,18 +525,6 @@ def distance_rad_sql(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> 
     return F.atan2(F.sqrt(cx * cx + cy * cy + cz * cz), ax * bx + ay * by + az * bz)
 
 
-def _with_query_xyz(q_df: DataFrame) -> DataFrame:
-    """Unit xyz of (qlat, qlng) as columns — the exact expressions
-    distance_rad_sql emits for its first argument pair, evaluated once per
-    (tiny, broadcast) query row instead of per candidate."""
-    rl, rg = F.radians(F.col("qlat")), F.radians(F.col("qlng"))
-    return (
-        q_df.withColumn("_qx", F.cos(rg) * F.cos(rl))
-        .withColumn("_qy", F.sin(rg) * F.cos(rl))
-        .withColumn("_qz", F.sin(rl))
-    )
-
-
 def _dist_from_xyz() -> Column:
     """atan2(|q x p|, q . p) from precomputed xyz columns — float-identical
     to distance_rad_sql(qlat, qlng, lat, lng)."""
@@ -546,139 +536,6 @@ def _dist_from_xyz() -> Column:
         + F.col("_qz") * F.col("_pz")
     )
     return F.atan2(F.sqrt(cx * cx + cy * cy + cz * cz), dot)
-
-
-def knn_join(
-    points: DataFrame,
-    queries: list[tuple[object, float, float]],
-    k: int,
-    initial_radius_deg: float | None = None,
-    max_doublings: int = 8,
-    cell_col: str = "cell_id",
-    point_key: str = "url",
-) -> DataFrame:
-    """k nearest points per query: iterative cap-doubling covering join
-    (Cap.Expanded, cap.go:294-299) + window top-k with deterministic
-    (dist, cell_id, key) tie-break.
-
-    Each round runs ONE Spark job over all still-unresolved queries (their
-    cap coverings unioned into a single broadcast), so the number of passes
-    is bounded by max_doublings regardless of query count.
-
-    ``initial_radius_deg=None`` sizes the first cap from global point
-    density (one count over the cached input): a fixed small radius costs
-    a doubling round per factor-of-2 it undershoots, and every round is a
-    full scheduling pass even when the covering rejects most of the data.
-    The schedule only affects performance — the result set is the exact
-    top-k regardless.
-    """
-    import math
-
-    from pyspark.sql.window import Window
-
-    spark = points.sparkSession
-    pending = {qid: (lat, lng) for qid, lat, lng in queries}
-
-    # the doubling loop re-scans ``points`` once per round — cache it for
-    # the loop's duration (unless the caller already persisted it; the
-    # check must read the CALLER's DataFrame, since the derived one below
-    # always reports StorageLevel.NONE), with unit-xyz projected ONCE per
-    # point (the same trig-per-candidate cut as distance_join: the
-    # exact-distance stage then runs pure multiply-add)
-    caller_sl = points.storageLevel
-    own_cache = caller_sl.useMemory is False and caller_sl.useDisk is False
-    rl, rg = F.radians(F.col("lat")), F.radians(F.col("lng"))
-    points = (
-        points.withColumn("_px", F.cos(rg) * F.cos(rl))
-        .withColumn("_py", F.sin(rg) * F.cos(rl))
-        .withColumn("_pz", F.sin(rl))
-    )
-    if own_cache:
-        points = points.persist()
-
-    if initial_radius_deg is None:
-        n = max(points.count(), 1)  # cheap on the cached input
-        # expected k points within r: k/n ~ cap_area/sphere_area ~ (r/114)^2
-        initial_radius_deg = min(45.0, max(0.05, 114.0 * math.sqrt(k / n)))
-    radius = initial_radius_deg
-
-    # Result rows STAY DISTRIBUTED: each round persists its top-k and only
-    # the per-query COUNTS come to the driver (the doubling decision needs
-    # them); finished queries' rows are appended as lazy slices of the
-    # persisted round result and unioned at the end. Large query sets
-    # therefore never funnel k x q result rows through the driver — the
-    # driver traffic is O(q) counts per round.
-    w = Window.partitionBy("qid").orderBy(F.col("dist_rad"), F.col(point_key))
-    parts: list[DataFrame] = []
-
-    def _topk(cand: DataFrame) -> DataFrame:
-        # no dedup needed: a normalized CellUnion's ranges are disjoint
-        # (cellunion.go:34-92 drops contained cells), so the covering join
-        # emits each (qid, point) pair at most once
-        return (
-            cand.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-        )
-
-    for round_idx in range(max_doublings + 1):
-        if not pending:
-            break
-        rows = []
-        for qid, (qlat, qlng) in pending.items():
-            cap = Cap.from_latlng_deg(qlat, qlng, radius)
-            cov = RegionCoverer(max_cells=8).cell_union_covering(cap)
-            rmin, rmax = cov.ranges()
-            for lo, hi in zip(_biased(rmin), _biased(rmax)):
-                rows.append((str(qid), float(qlat), float(qlng), lo, hi))
-        cov_df = _with_query_xyz(spark.createDataFrame(
-            rows, "qid string, qlat double, qlng double, cov_rmin long, cov_rmax long"
-        ))
-        cand = points.join(
-            F.broadcast(cov_df),
-            (F.col(cell_col) >= F.col("cov_rmin")) & (F.col(cell_col) <= F.col("cov_rmax")),
-            "inner",
-        ).drop("cov_rmin", "cov_rmax").withColumn(
-            "dist_rad", _dist_from_xyz()
-        ).where(F.col("dist_rad") <= math.radians(radius)).drop(
-            "_qx", "_qy", "_qz", "_px", "_py", "_pz"
-        )
-
-        # persist + count in ONE job: the counts both drive the doubling
-        # decision and materialize the cached partitions the final union
-        # reads (k x |pending| rows per round — tiny)
-        topk = _topk(cand).persist()
-        cnts = {r["qid"]: r["n"] for r in
-                topk.groupBy("qid").agg(F.count("*").alias("n")).collect()}
-        done = [q for q in pending if cnts.get(str(q), 0) >= k]
-        if done:
-            done_set = sorted(str(q) for q in done)
-            parts.append(topk.where(F.col("qid").isin(done_set)))
-            for q in done:
-                del pending[q]
-        radius *= 2.0
-        if radius > 180.0 and pending:
-            # final full pass for under-populated queries: no covering filter
-            rows = [(str(qid), float(qlat), float(qlng)) for qid, (qlat, qlng) in pending.items()]
-            q_df = _with_query_xyz(
-                spark.createDataFrame(rows, "qid string, qlat double, qlng double")
-            )
-            cand = points.crossJoin(F.broadcast(q_df)).withColumn(
-                "dist_rad", _dist_from_xyz()
-            ).drop("_qx", "_qy", "_qz", "_px", "_py", "_pz")
-            topk = _topk(cand).persist()
-            topk.count()  # materialize before points may be unpersisted
-            parts.append(topk)
-            pending = {}
-    if own_cache:
-        # parts are persisted+materialized above; evictions would recompute
-        # from source (correct, just slower), so the input cache can go
-        points.unpersist()
-    if not parts:
-        return points.limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out
 
 
 def _knn_start_level(
@@ -736,6 +593,17 @@ def _knn_start_level(
     return level_skew if level_skew is not None else 30
 
 
+# Largest queries x points product that skips the level ladder. The face
+# round's exact cross join moves that many candidate rows through one
+# window sort, so its time grows with the product, while the ladder's
+# start-level sample and per-round persist + count cost about 2 s at any
+# query count. Face vs ladder on 15,000 points, local[4]: 1.34 vs 2.32 s
+# at 450k pairs, 2.37 vs 2.26 s at 1.05M, 6.1 vs 1.9 s at 4.05M.
+KNN_CROSS_MAX_PAIRS = 1 << 20
+# Levels the ladder may visit before the face round takes the rest.
+_KNN_MAX_LEVELS = 16
+
+
 def knn_join_df(
     points: DataFrame,
     queries: DataFrame,
@@ -743,19 +611,19 @@ def knn_join_df(
     point_key: str = "url",
     query_key: str = "qid",
     cell_col: str = "cell_id",
-    initial_level: int | None = None,
-    max_rounds: int = 16,
 ) -> DataFrame:
-    """k nearest points for EVERY row of a query DataFrame — the
-    DataFrame-scale sibling of knn_join. knn_join's per-query driver-side
-    cap coverings are the right plan for handfuls of queries; at millions
-    of queries the driver would loop over q Python objects every round.
-    Here the driver holds only the round counter — both sides stay
-    distributed end to end.
+    """k nearest points for EVERY row of a query DataFrame. The driver
+    holds only counts and the round counter — both sides stay
+    distributed end to end, from two queries to millions.
 
-    Round r blocks both sides at level L_r (L_0 from point density with a
-    sampled-max-block SKEW GUARD — see inline comment; each round coarsens
-    one level = 4x the area): queries explode to their 3x3 cell
+    The plan follows the candidate volume, which the two input counts
+    give before any round runs: while queries x points is at most
+    ``KNN_CROSS_MAX_PAIRS`` every query goes straight to the face round
+    below (an exact cross join), otherwise to the level ladder.
+
+    Ladder round r blocks both sides at level L_r (L_0 from point density
+    with a sampled-max-block SKEW GUARD — see inline comment; each round
+    coarsens one level = 4x the area): queries explode to their 3x3 cell
     neighborhood (AppendAllNeighbors, cellid.go:257-287), points key by
     Parent(L_r) (pure bitwise SQL), one shuffle hash join, window top-k
     per query. Dense-region queries finish in the first rounds (their
@@ -775,7 +643,7 @@ def knn_join_df(
     ``queries`` needs (query_key, lat, lng, cell_col) with LEAF cell ids —
     the engine-wide point-table convention (see distance_join's warning on
     coarse ids). Output: (query_key, point_key, knn_rank, dist_rad) with
-    the deterministic (dist, point_key) tie-break — knn_join's contract.
+    the deterministic (dist, point_key) tie-break.
     """
     import math
 
@@ -807,7 +675,8 @@ def knn_join_df(
     # per-round 32-task scheduling never pays for the exchange (measured
     # +0.9s on the 30-query demo vs -6s on the 150k-query all-NN
     # workloads). The count is exact (size estimates do not see filter
-    # selectivity) and is reused as the pending counter below.
+    # selectivity) and is reused as the pending counter below; with the
+    # point count it also picks between the ladder and the cross join.
     n_queries = queries.count()
     _widen_knn = (
         (lambda df: widen_to_parallelism(df, min_bytes=512 << 10))
@@ -820,9 +689,10 @@ def knn_join_df(
     )
     if own_cache:
         pts = pts.persist()
+    n = max(pts.count(), 1)  # also materializes the cache
+    ladder = n_queries * n > KNN_CROSS_MAX_PAIRS
 
-    if initial_level is None:
-        n = max(pts.count(), 1)  # also materializes the cache
+    if ladder:
         r0 = math.radians(min(45.0, max(0.05, 114.0 * math.sqrt(k / n))))
         level_mean = max(0, min(30, MIN_WIDTH.max_level(r0)))
         # SKEW + OCCUPANCY GUARD: the mean-density level is
@@ -857,8 +727,6 @@ def knn_join_df(
             dtype=np.int64,
         ).view(np.uint64) ^ np.uint64(1 << 63)
         level = max(level_mean, _knn_start_level(cells, level_mean, k, frac))
-    else:
-        level = initial_level
 
     pending = _xyz(_widen_knn(queries), "q").select(
         F.col(query_key).alias("_qkey"), F.col(cell_col).alias("_qcell"),
@@ -894,9 +762,9 @@ def knn_join_df(
     # they never touch a coarser level whose blocks can be 4^batch x
     # bigger. Only the sparse stragglers pay the batched coarser rounds.
     levels_per_round = 4
-    budget = max_rounds
+    budget = _KNN_MAX_LEVELS
     first = True
-    while budget > 0 and level >= 1 and nq_left > 0:
+    while ladder and budget > 0 and level >= 1 and nq_left > 0:
         width = 1 if first else min(levels_per_round, budget)
         first = False
         lvls = [level - i for i in range(width) if level - i >= 1]
@@ -974,19 +842,19 @@ def knn_join_df(
             nq_left -= n_fin
         level -= len(lvls)
 
-    # face-blocked completion round: every remaining query sees every
-    # point (the same all-6-faces trick distance_join uses past the
-    # level-0 MinWidth), so it is exact with no guarantee check and also
-    # settles queries when the corpus holds fewer than k points.
+    # face-blocked round: every remaining query sees every point (the
+    # same all-6-faces trick distance_join uses past the level-0
+    # MinWidth), so it is exact with no guarantee check and also settles
+    # queries when the corpus holds fewer than k points.
     if nq_left:
-        if nq_left > 10_000:
+        if ladder and nq_left > 10_000:
             import logging
 
             logging.getLogger(__name__).warning(
-                "knn_join_df: %d queries reached the face completion round "
-                "(a cross join against all points) — raise max_rounds or "
-                "initial_level so the level ladder settles them first.",
-                nq_left,
+                "knn_join_df: %d queries left after the level ladder fall "
+                "through to the face round, a cross join against all %d "
+                "points.",
+                nq_left, n,
             )
         face_ids = F.array(
             *[F.lit(b) for b in _biased([(2 * f + 1) << 60 for f in range(6)])]
@@ -1016,9 +884,8 @@ def knn_join_df(
     # ONE eager checkpoint of the final (bounded, <= queries*k rows)
     # result cuts the lineage over the per-round persisted frames, so
     # every intermediate can be released NOW instead of living for the
-    # session (the round-2 version leaked up to max_rounds persisted
-    # ranked frames per call; a per-round checkpoint variant cost two
-    # extra jobs per round — this is the cheap point to materialize).
+    # session (a per-round checkpoint variant cost two extra jobs per
+    # round — this is the cheap point to materialize).
     # It is a reliable checkpoint when a checkpoint dir is configured
     # (``_default_materialize``); local checkpoint blocks are freed by
     # the ContextCleaner when the caller drops the result.
@@ -1090,7 +957,7 @@ def distance_join(
     import math
 
     from ..geometry.metric import MIN_WIDTH
-    from .functions import s2_neighborhood
+    from .functions import s2_neighborhood, widen_to_parallelism
 
     radius_rad = math.radians(radius_deg)
     level = max(0, min(30, MIN_WIDTH.max_level(radius_rad)))
@@ -1132,15 +999,10 @@ def distance_join(
     # only when the scan is narrower than the cluster (an exchange of the
     # slim point rows is cheap; forcing one on an already-wide 100 TB
     # table would not be).
-    slots = points_a.sparkSession.sparkContext.defaultParallelism
-
-    def _widen(df: DataFrame) -> DataFrame:
-        if df.rdd.getNumPartitions() < max(2, slots // 2):
-            return df.repartition(slots)
-        return df
-
-    wa = _widen(points_a)
-    wb = wa if self_join else (points_b if broadcast_b else _widen(points_b))
+    wa = widen_to_parallelism(points_a, min_bytes=0)
+    wb = wa if self_join else (
+        points_b if broadcast_b else widen_to_parallelism(points_b, min_bytes=0)
+    )
 
     if (time_col is None) != (time_window is None):
         raise ValueError("time_col and time_window must be set together")

@@ -174,7 +174,7 @@ def clark_evans(
     used with lambda = n / 4pi (points per steradian) and distances in
     radians — the convention the oracle replays.
 
-    Per-point NN distances come from the distributed cap-doubling kNN
+    Per-point NN distances come from the distributed kNN join
     (``joins.knn_join_df`` with k=2 against the set itself; self-matches
     drop and the min over the remaining candidates is exact for any
     geometry — rank 1 may be the self row at distance 0). Everything
@@ -894,7 +894,7 @@ def nn_gfunction(
     G rising faster than the CSR expectation 1 - exp(-lambda*pi*r^2)
     means clustering at that scale.
 
-    Per-point NN distances come from the distributed cap-doubling kNN
+    Per-point NN distances come from the distributed kNN join
     (``joins.knn_join_df`` k=2 against the set itself; the self-match
     drops and the min over remaining candidates is the exact NN). One
     conditional aggregation then buckets every point into each radius it

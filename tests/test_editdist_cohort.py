@@ -188,3 +188,30 @@ def test_iterative_loops_honor_checkpoint_dir(spark, tmp_path, build):
         got = sorted(build(spark).collect())
         assert _wrote(ckdir), "no reliable checkpoint files written"
     assert want and got == want
+
+
+def _jobs(spark, group, action):
+    """Spark jobs ``action()`` launches, tagged by a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_broadcast_bounded_truncates_and_counts_in_one_action(spark):
+    """Without a row count, the broadcast gate's count is the one action
+    that also materializes the side table's checkpoint: it launches no
+    job beyond a plain count's, and the frame it returns is cut from the
+    caller's lineage."""
+    from gos2_spark.pipeline.graph import _broadcast_bounded
+
+    _, per_count = _jobs(spark, "plain-count", spark.range(10).count)
+    fresh = spark.range(1000).withColumn("v", F.col("id") % 7)
+    out, jobs = _jobs(spark, "broadcast-gate", lambda: _broadcast_bounded(fresh))
+    assert jobs == per_count
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan and "Range" not in plan, plan
+    assert out.count() == 1000

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from gos2_spark.geometry import Cap, Loop, Polygon
 from gos2_spark.geometry import _vec as V
 from gos2_spark.spark.joins import (
-    TileSet, cap_query, knn_join, point_in_polygon_join, rect_query,
+    TileSet, cap_query, point_in_polygon_join, rect_query,
 )
 from gos2_spark.spark.pages import geoparsed_pages, synth_pages
 
@@ -123,27 +123,6 @@ def test_rect_query_matches_oracle_with_wrap(spark, points):
         if -30.0 <= r.lat <= 10.0 and (r.lng >= 160.0 or r.lng <= -160.0)
     }
     assert got == want
-
-
-def test_knn_matches_bruteforce(spark, points):
-    queries = [("q_nyc", 40.7128, -74.0060), ("q_remote", -48.87, 123.39)]
-    k = 5
-    got = knn_join(points, queries, k=k, initial_radius_deg=0.5).collect()
-    rows = points.select("url", "cell_id", "lat", "lng").collect()
-    for qid, qlat, qlng in queries:
-        from gos2_spark.kernels import projection as PJ
-
-        qx = np.array([qlat]); qy = np.array([qlng])
-        lat = np.array([r.lat for r in rows]); lng = np.array([r.lng for r in rows])
-        x1, y1, z1 = PJ.latlng_to_xyz(np.radians(qlat), np.radians(qlng))
-        x2, y2, z2 = PJ.latlng_to_xyz(np.radians(lat), np.radians(lng))
-        d = PJ.point_angle(x1, y1, z1, x2, y2, z2)
-        order = sorted(range(len(rows)), key=lambda i: (d[i], rows[i].cell_id, rows[i].url))
-        want = [rows[i].url for i in order[:k]]
-        got_q = sorted(
-            [r for r in got if r.qid == qid], key=lambda r: r.knn_rank
-        )
-        assert [r.url for r in got_q] == want, f"kNN mismatch for {qid}"
 
 
 def test_join_plan_is_broadcast_no_shuffle(spark, points, tileset):
@@ -403,82 +382,63 @@ def test_extract_text_byte_identical(spark):
     assert bad2 == 0
 
 
-def test_knn_many_queries_single_pass(spark, points):
-    """100 queries resolve in bounded rounds with exact per-query top-k
-    (sampled brute-force check on 10 of them)."""
-    from gos2_spark.kernels import projection as PJ
-    from gos2_spark.spark.joins import knn_join
-
-    rng = np.random.default_rng(41)
-    queries = [
+def _random_queries(seed: int, n: int) -> list[tuple[str, float, float]]:
+    rng = np.random.default_rng(seed)
+    return [
         (f"q{i:03d}", float(rng.uniform(-70, 70)), float(rng.uniform(-180, 180)))
-        for i in range(100)
+        for i in range(n)
     ]
-    k = 3
-    got = knn_join(points, queries, k=k).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append(r)
-    assert set(by_q) == {q for q, _, _ in queries}
-    assert all(len(v) == k for v in by_q.values())
-
-    rows = points.select("url", "lat", "lng").collect()
-    lat = np.array([r.lat for r in rows]); lng = np.array([r.lng for r in rows])
-    x2, y2, z2 = PJ.latlng_to_xyz(np.radians(lat), np.radians(lng))
-    for qid, qlat, qlng in queries[::10]:
-        x1, y1, z1 = PJ.latlng_to_xyz(np.radians(qlat), np.radians(qlng))
-        d = PJ.point_angle(x1, y1, z1, x2, y2, z2)
-        order = sorted(range(len(rows)), key=lambda i: (d[i], rows[i].url))
-        want = [rows[i].url for i in order[:k]]
-        have = [r.url for r in sorted(by_q[qid], key=lambda r: r.knn_rank)]
-        assert have == want, qid
 
 
-def test_knn_join_df_matches_bruteforce(spark, points):
-    """DataFrame-native kNN join (knn_join_df): 60 distributed queries,
-    exact per-query top-k vs brute force on a sample, plus the
-    fewer-than-k-points face-round completion path."""
+# (queries, point limit, k, above KNN_CROSS_MAX_PAIRS): queries is a list
+# of (qid, lat, lng) or "self" for every point against the set itself, and
+# a limit of None keeps every fixture point (3,375 of the 4,000 pages
+# geoparse); below the bound knn_join_df answers in its one face round,
+# above it the level ladder runs first
+_KNN_CASES = {
+    "two_queries": (
+        [("q_nyc", 40.7128, -74.0060), ("q_remote", -48.87, 123.39)],
+        None, 5, False,
+    ),
+    "many_queries": (_random_queries(41, 100), None, 3, False),
+    "fewer_than_k": (_random_queries(43, 4), 2, 5, False),
+    "self_join": ("self", None, 2, True),
+}
+
+
+@pytest.mark.parametrize("case", list(_KNN_CASES))
+def test_knn_join_df_matches_bruteforce(spark, points, case):
+    """knn_join_df returns every query's exact top-k, ties broken by
+    (dist, url), on both sides of its cross-join bound — including
+    fewer points than k, where a query gets all of them."""
     from gos2_spark.kernels import projection as PJ
     from gos2_spark.spark.functions import add_cellid_sql
-    from gos2_spark.spark.joins import knn_join_df
+    from gos2_spark.spark.joins import KNN_CROSS_MAX_PAIRS, knn_join_df
 
-    rng = np.random.default_rng(43)
-    qrows = [
-        (f"q{i:03d}", float(rng.uniform(-70, 70)), float(rng.uniform(-180, 180)))
-        for i in range(60)
-    ]
+    queries, limit, k, above = _KNN_CASES[case]
+    pts = points if limit is None else points.orderBy("url").limit(limit)
+    rows = pts.select("url", "lat", "lng").collect()
+    if queries == "self":
+        queries = [(r.url, r.lat, r.lng) for r in rows]
+    assert (len(queries) * len(rows) > KNN_CROSS_MAX_PAIRS) is above
     qdf = add_cellid_sql(
-        spark.createDataFrame(qrows, "qid string, lat double, lng double"),
+        spark.createDataFrame(queries, "qid string, lat double, lng double"),
         "lat", "lng", "cell_id",
     )
-    k = 3
-    got = knn_join_df(points, qdf, k=k).collect()
     by_q = {}
-    for r in got:
+    for r in knn_join_df(pts, qdf, k=k).collect():
         by_q.setdefault(r.qid, []).append(r)
-    assert set(by_q) == {q for q, _, _ in qrows}
-    assert all(len(v) == k for v in by_q.values())
+    assert set(by_q) == {q for q, _, _ in queries}
 
-    rows = points.select("url", "lat", "lng").collect()
+    url = np.array([r.url for r in rows])
     lat = np.array([r.lat for r in rows]); lng = np.array([r.lng for r in rows])
     x2, y2, z2 = PJ.latlng_to_xyz(np.radians(lat), np.radians(lng))
-    for qid, qlat, qlng in qrows[::6]:
+    for qid, qlat, qlng in queries:
         x1, y1, z1 = PJ.latlng_to_xyz(np.radians(qlat), np.radians(qlng))
         d = PJ.point_angle(x1, y1, z1, x2, y2, z2)
-        order = sorted(range(len(rows)), key=lambda i: (d[i], rows[i].url))
-        want = [rows[i].url for i in order[:k]]
+        want = list(url[np.lexsort((url, d))[:k]])
         have = [r.url for r in sorted(by_q[qid], key=lambda r: r.knn_rank)]
         assert have == want, qid
-
-    # fewer points than k: the face completion round returns all of them
-    tiny = points.limit(2).cache()
-    tiny.count()
-    out = knn_join_df(tiny, qdf.limit(4), k=5).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r.qid, []).append(r)
-    assert len(per_q) == 4 and all(len(v) == 2 for v in per_q.values())
-    tiny.unpersist()
 
 
 def test_route_proximity_join_matches_brute_force(spark):
