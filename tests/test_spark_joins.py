@@ -390,36 +390,17 @@ def _random_queries(seed: int, n: int) -> list[tuple[str, float, float]]:
     ]
 
 
-# (queries, point limit, k, above KNN_CROSS_MAX_PAIRS): queries is a list
-# of (qid, lat, lng) or "self" for every point against the set itself, and
-# a limit of None keeps every fixture point (3,375 of the 4,000 pages
-# geoparse); below the bound knn_join_df answers in its one face round,
-# above it the level ladder runs first
-_KNN_CASES = {
-    "two_queries": (
-        [("q_nyc", 40.7128, -74.0060), ("q_remote", -48.87, 123.39)],
-        None, 5, False,
-    ),
-    "many_queries": (_random_queries(41, 100), None, 3, False),
-    "fewer_than_k": (_random_queries(43, 4), 2, 5, False),
-    "self_join": ("self", None, 2, True),
-}
-
-
-@pytest.mark.parametrize("case", list(_KNN_CASES))
-def test_knn_join_df_matches_bruteforce(spark, points, case):
-    """knn_join_df returns every query's exact top-k, ties broken by
-    (dist, url), on both sides of its cross-join bound — including
-    fewer points than k, where a query gets all of them."""
+def _assert_knn_join_df_exact(spark, pts, queries, k, above):
+    """knn_join_df(pts, queries, k) returns every query's exact top-k vs
+    brute force, ties broken by (dist, url) as the join does. `above`
+    says which side of KNN_CROSS_MAX_PAIRS the input sits on: below it
+    knn_join_df answers in its one face round, above it the level ladder
+    runs first. Returns the rows per query."""
     from gos2_spark.kernels import projection as PJ
     from gos2_spark.spark.functions import add_cellid_sql
     from gos2_spark.spark.joins import KNN_CROSS_MAX_PAIRS, knn_join_df
 
-    queries, limit, k, above = _KNN_CASES[case]
-    pts = points if limit is None else points.orderBy("url").limit(limit)
     rows = pts.select("url", "lat", "lng").collect()
-    if queries == "self":
-        queries = [(r.url, r.lat, r.lng) for r in rows]
     assert (len(queries) * len(rows) > KNN_CROSS_MAX_PAIRS) is above
     qdf = add_cellid_sql(
         spark.createDataFrame(queries, "qid string, lat double, lng double"),
@@ -439,6 +420,41 @@ def test_knn_join_df_matches_bruteforce(spark, points, case):
         want = list(url[np.lexsort((url, d))[:k]])
         have = [r.url for r in sorted(by_q[qid], key=lambda r: r.knn_rank)]
         assert have == want, qid
+    return by_q
+
+
+def test_knn_matches_bruteforce(spark, points):
+    """Two fixed queries (a dense city and a remote ocean point), k=5."""
+    queries = [("q_nyc", 40.7128, -74.0060), ("q_remote", -48.87, 123.39)]
+    _assert_knn_join_df_exact(spark, points, queries, 5, above=False)
+
+
+def test_knn_many_queries_single_pass(spark, points):
+    """100 random queries, k=3, exact top-k on every query."""
+    by_q = _assert_knn_join_df_exact(
+        spark, points, _random_queries(41, 100), 3, above=False
+    )
+    assert all(len(v) == 3 for v in by_q.values())
+
+
+def test_knn_join_df_matches_bruteforce(spark, points):
+    """60 distributed queries with exact top-k, plus fewer points than k,
+    where the face round returns all of them to every query."""
+    queries = _random_queries(43, 60)
+    _assert_knn_join_df_exact(spark, points, queries, 3, above=False)
+
+    tiny = points.orderBy("url").limit(2)
+    by_q = _assert_knn_join_df_exact(spark, tiny, queries[:4], 5, above=False)
+    assert all(len(v) == 2 for v in by_q.values())
+
+
+def test_knn_join_df_self_join_above_cross_bound(spark, points):
+    """Every point against the set itself (3,375 x 3,375 pairs, above
+    KNN_CROSS_MAX_PAIRS): the level ladder runs before the face round
+    and every point still gets its exact top-2."""
+    rows = points.select("url", "lat", "lng").collect()
+    queries = [(r.url, r.lat, r.lng) for r in rows]
+    _assert_knn_join_df_exact(spark, points, queries, 2, above=True)
 
 
 def test_route_proximity_join_matches_brute_force(spark):
