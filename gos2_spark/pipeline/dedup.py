@@ -239,8 +239,9 @@ def simhash(docs: DataFrame, key_col: str = "doc_id", text_col: str = "text") ->
     runs in numpy over the flattened ragged arrays (np.add.reduceat), never
     per-row Python.
     """
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
+
+    from ..spark.functions import pandas_udf
 
     @pandas_udf(LongType())
     def _simhash_from_hashes(hashes: pd.Series) -> pd.Series:
@@ -610,19 +611,21 @@ def edit_distance_pairs(
     function of the titles alone.
     """
     from ..spark.functions import widen_to_parallelism
-    from .graph import _default_materialize
+    from .graph import _broadcast_bounded, _truncate
 
-    spark = docs.sparkSession
-    # one eager checkpoint: the narrow (key, title, blk) frame feeds the
-    # over-full-block scan, its anti-join, the distinct-title build and
-    # the key-expansion sides — scan the corpus once (see jaccard_join's
-    # note). Widen first: a single-row-group parquet scan arrives as ONE
-    # partition, which would pin every downstream probe to one core.
+    # one checkpoint, materialized by its row count: the narrow (key,
+    # title, blk) frame feeds the over-full-block scan, its anti-join, the
+    # distinct-title build and the key-expansion sides — scan the corpus
+    # once (see jaccard_join's note). Widen first: a single-row-group
+    # parquet scan arrives as ONE partition, which would pin every
+    # downstream probe to one core.
     t = docs.select(
         F.col(key_col).alias("key"),
         F.lower(F.substring(text_col, 1, title_len)).alias("title"),
     ).withColumn("blk", F.substring("title", 1, prefix_len))
-    t = _default_materialize(spark)(widen_to_parallelism(t, min_bytes=0))
+    t = _truncate(widen_to_parallelism(t, min_bytes=0))
+    # every broadcast side below has at most this many rows
+    n_t = t.count()
     if bucket_cap is not None:
         over = (
             t.groupBy("blk")
@@ -640,13 +643,13 @@ def edit_distance_pairs(
             )
             t = t.join(F.broadcast(over.select("blk")), "blk", "left_anti")
     # distinct titles per block: the DP side (bounded by the title
-    # vocabulary, broadcastable)
+    # vocabulary)
     d = t.select("blk", "title").distinct()
     da, db = d.alias("da"), d.alias("db")
     dist = F.levenshtein(F.col("da.title"), F.col("db.title"), max_dist)
     tp = (
         da.join(
-            F.broadcast(db),
+            _broadcast_bounded(db, n_t),
             (F.col("da.blk") == F.col("db.blk"))
             & (F.col("da.title") < F.col("db.title"))
             & (
@@ -665,8 +668,8 @@ def edit_distance_pairs(
     ka = t.select(F.col("title").alias("_ta"), F.col("key").alias("_ka"))
     kb = t.select(F.col("title").alias("_tb"), F.col("key").alias("_kb"))
     cross = (
-        tp.join(F.broadcast(ka), "_ta")
-        .join(F.broadcast(kb), "_tb")
+        tp.join(_broadcast_bounded(ka, n_t), "_ta")
+        .join(_broadcast_bounded(kb, n_t), "_tb")
         .select(
             F.least("_ka", "_kb").alias("key_a"),
             F.greatest("_ka", "_kb").alias("key_b"),
@@ -677,7 +680,7 @@ def edit_distance_pairs(
     within = (
         t.alias("x")
         .join(
-            F.broadcast(t.select("title", "key").alias("y")),
+            _broadcast_bounded(t.select("title", "key").alias("y"), n_t),
             (F.col("x.title") == F.col("y.title"))
             & (F.col("x.key") < F.col("y.key")),
         )

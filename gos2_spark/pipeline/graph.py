@@ -82,9 +82,12 @@ def _default_materialize(spark, eager: bool = True):
 
 def _truncate(df: DataFrame) -> DataFrame:
     """One round of a FIXED-COUNT loop (no per-round driver decision):
-    without a checkpoint dir a LAZY localCheckpoint cuts the plan at once
-    with zero jobs and the whole round chain materializes in the caller's
-    single action; with one, the eager reliable checkpoint."""
+    without a checkpoint dir a LAZY localCheckpoint cuts the plan and the
+    whole round chain materializes in the caller's single action; with
+    one, the eager reliable checkpoint. The lazy form launches no job only
+    for a plan with no exchange: producing the checkpoint's RDD runs the
+    round's shuffle stages, one job each under AQE (a 3-round groupBy/join
+    probe launched 2 jobs here with AQE, 3 without)."""
     return _default_materialize(df.sparkSession, eager=False)(df)
 
 
@@ -264,7 +267,7 @@ def connected_components(
         # MIN label (every seed row names a clique the key belongs to, so
         # the min is as valid as any): one lmap row per key, or each
         # duplicate seed row would become a duplicate output row.
-        lmap = mat(
+        lmap = _truncate(
             keyed_nodes.join(
                 initial_labels.groupBy(F.col(node_col).alias("key")).agg(
                     F.min("label").alias("label")
@@ -275,7 +278,8 @@ def connected_components(
                 "key", F.coalesce(F.col("label"), F.col("key")).alias("label")
             )
         )
-        # broadcast the label map while provably bounded
+        # broadcast the label map while provably bounded; the count also
+        # materializes the checkpoint
         n_lmap = lmap.count()
         ma = _broadcast_bounded(
             lmap.select(F.col("key").alias("key_a"), F.col("label").alias("_la")),

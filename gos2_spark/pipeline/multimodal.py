@@ -72,8 +72,8 @@ def synth_media_png(spark, num_rows: int, max_side: int = 24) -> DataFrame:
     (pandas UDF, one encode per row inside executors, never the driver).
     Channel count cycles 1/3/4 by id so gray/RGB/RGBA all appear."""
     import pandas as pd  # noqa: F811 (kept local for the UDF closure)
-    from pyspark.sql.functions import pandas_udf
 
+    from ..spark.functions import pandas_udf
     from .png import encode_png
 
     @pandas_udf(BinaryType())
@@ -109,8 +109,8 @@ def synth_media_jpeg(spark, num_rows: int, max_side: int = 24,
     id), encoded distributed via a pandas UDF (one encode per row inside
     executors). Channel count cycles gray/RGB by id."""
     import pandas as pd  # noqa: F811 (kept local for the UDF closure)
-    from pyspark.sql.functions import pandas_udf
 
+    from ..spark.functions import pandas_udf
     from .jpeg import encode_jpeg
 
     @pandas_udf(BinaryType())
@@ -148,8 +148,8 @@ def synth_media_wav(spark, num_rows: int, max_frames: int = 50,
     stream whose int16 sample (k, c) = ((id*31 + k*7 + c*13) % 65536)
     - 32768, encoded distributed. Channel count cycles mono/stereo."""
     import pandas as pd  # noqa: F811 (kept local for the UDF closure)
-    from pyspark.sql.functions import pandas_udf
 
+    from ..spark.functions import pandas_udf
     from .audio import encode_wav
 
     @pandas_udf(BinaryType())
@@ -187,8 +187,8 @@ def synth_media_avi(spark, num_rows: int, fps: float = 25.0) -> DataFrame:
     EXACTLY (DC-only, quant step 2), so per-frame means are integers an
     oracle can reconstruct. Encoded distributed via a pandas UDF."""
     import pandas as pd  # noqa: F811 (kept local for the UDF closure)
-    from pyspark.sql.functions import pandas_udf
 
+    from ..spark.functions import pandas_udf
     from .video import encode_avi_mjpeg
 
     @pandas_udf(BinaryType())

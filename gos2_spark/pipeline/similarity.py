@@ -12,8 +12,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType
+
+from ..spark.functions import pandas_udf
 
 
 def _qmat_udf(queries: np.ndarray, normalize: bool):

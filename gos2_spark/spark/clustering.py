@@ -111,6 +111,7 @@ def _dbscan_from_pairs(
     from ..pipeline.graph import (
         _broadcast_bounded,
         _default_materialize,
+        _truncate,
         connected_components,
     )
 
@@ -127,10 +128,11 @@ def _dbscan_from_pairs(
     # For min_pts >= 2 a zero-degree point can never be core, so core is a
     # straight filter over the degree table — no join back to the full
     # point set (points absent from ``deg`` have degree 0 < min_pts - 1).
+    # The count also materializes the checkpoint: one job, not two.
     if min_pts <= 1:
-        core = mat(keys)
+        core = _truncate(keys)
     else:
-        core = mat(
+        core = _truncate(
             deg.where(F.col("n_nbrs") >= min_pts - 1).select("key")
         )
     n_core = core.count()

@@ -12,13 +12,17 @@ CellID convention in DataFrames: **biased signed int64** (raw uint64 XOR
 
 from __future__ import annotations
 
+import functools
+import sys
+import zipimport
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import pandas_udf as _pyspark_pandas_udf
 from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StringType,
+    ArrayType, DataType, DoubleType, LongType, StringType,
 )
 
 from ..kernels import hilbert as H
@@ -35,6 +39,45 @@ try:  # pragma: no cover
     _pa.set_io_thread_count(1)
 except Exception:
     pass
+
+
+def drop_zip_importers() -> None:
+    """Forget the cached finders of zip archives on the import path.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task, and on CPython 3.11/3.12 that makes every cached
+    ``zipimporter`` re-read its whole archive directory. A worker holds
+    about 16 of them over ``pyspark.zip``, the py4j zip and the Spark core
+    jar (26,672 entries), which cost ~0.1 s of every UDF task. A dropped
+    finder is rebuilt on the next lookup from ``zipimport``'s own directory
+    cache, without reading the archive again.
+    """
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
+def _dropping_zip_importers(f):
+    @functools.wraps(f)
+    def run(*args, **kwargs):
+        drop_zip_importers()
+        return f(*args, **kwargs)
+
+    return run
+
+
+def pandas_udf(f=None, returnType=None, functionType=None):
+    """``pyspark.sql.functions.pandas_udf`` for engine UDFs: same forms and
+    eval-type inference (``functools.wraps`` keeps the type hints), and
+    every call first runs :func:`drop_zip_importers`, so the next task's
+    cache invalidation in that worker finds no archive to re-read. Clearing
+    once is not enough: later first imports rebuild the root importers."""
+    if f is None or isinstance(f, (str, DataType)):  # decorator form
+        make = _pyspark_pandas_udf(f, returnType, functionType)
+        return lambda fn: make(_dropping_zip_importers(fn))
+    return _pyspark_pandas_udf(_dropping_zip_importers(f), returnType, functionType)
+
 
 _BIAS = np.uint64(1 << 63)
 

@@ -23,7 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
 from ..cover import CellUnion, RegionCoverer
@@ -31,6 +30,7 @@ from ..geometry import Cap, Loop, Polygon, Rect
 from ..kernels import hilbert as H
 from ..kernels import predicates as PR
 from ..kernels import projection as PJ
+from .functions import pandas_udf
 from .pages import s2_parent_sql
 
 _BIAS = np.uint64(1 << 63)
@@ -185,17 +185,26 @@ class TileSet:
         """Per-session join-side artifacts, built once and memoized: the
         covering DataFrame, the executor payload broadcast, the refine UDF,
         the prefilter ranges and the single-level grid. Rebuilding these per
-        join call cost ~2s of driver/scheduling time per query."""
+        join call cost ~2s of driver/scheduling time per query.
+
+        The two side frames (``cov``, ``grid``) are cached in the JVM and
+        counted once here. Built from a driver-side list, each execution
+        would otherwise re-serialize the rows through a Python RDD: four
+        Python-worker tasks in every join's broadcast stage (0.11 s of a
+        0.43-s ``pip_staged`` op on 4 cores, 0.01 s once cached). ``cache``,
+        not a local checkpoint: the frames live for the whole session and
+        stay recomputable from their lineage if an executor is lost."""
         key = id(spark.sparkContext)
         cached = getattr(self, "_artifacts", None)
         if cached is not None and cached[0] == key:
             return cached[1]
         art = {
-            "cov": self.covering_df(spark),
+            "cov": _cached_in_jvm(self.covering_df(spark)),
             "bc": spark.sparkContext.broadcast(self.payload()),
             "ranges": self.merged_ranges(),
         }
-        art["grid_level"], art["grid"] = self.grid_df(spark)
+        art["grid_level"], grid = self.grid_df(spark)
+        art["grid"] = _cached_in_jvm(grid)
         art["refine"] = _make_refine_udf(art["bc"])
         self._artifacts = (key, art)
         return art
@@ -306,6 +315,13 @@ class TileSet:
                 merged.append([lo, hi])
         self._ranges_memo = [(lo, hi) for lo, hi in merged]
         return self._ranges_memo
+
+
+def _cached_in_jvm(df: DataFrame) -> DataFrame:
+    """``df`` cached and materialized by one count."""
+    df = df.cache()
+    df.count()
+    return df
 
 
 def _make_refine_udf(bc):
@@ -1287,8 +1303,6 @@ def nearest_feature_join(
     """
     import math
 
-    from pyspark.sql.functions import pandas_udf as _pudf
-
     def _xyz(lat, lng):
         return (
             math.cos(math.radians(lng)) * math.cos(math.radians(lat)),
@@ -1306,7 +1320,7 @@ def nearest_feature_join(
             raise ValueError(f"feature {fid} needs at least 2 waypoints")
         feats.append((int(fid), segs))
 
-    @_pudf("nearest_fid long, nearest_dist_rad double")
+    @pandas_udf("nearest_fid long, nearest_dist_rad double")
     def s2_nearest_feature(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
         from ..kernels import predicates as PR
         from ..kernels import projection as PJ

@@ -76,13 +76,12 @@ def get_spark(
     On a real cluster this is launched via ``spark-submit --py-files
     gos2_spark.zip job.py`` and ``master`` comes from the submit command;
     locally it defaults to ``local[$SPARK_GRAFT_CPUS]``. The driver heap
-    is sized by :func:`driver_memory`.
+    is sized by :func:`driver_memory`. ``shuffle_partitions`` defaults to
+    two per core of the master (``defaultParallelism``).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     heap = driver_memory()
 
     # Pin per-worker BLAS/OMP to one thread: each executor core runs its own
@@ -102,14 +101,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Scan-split sizing: the 128MB default bin-packs small local parquet
         # files into FEWER TASKS THAN CORES (measured: a 1.2GB/128-file
         # table became 13 scan tasks at local[32] — the scan stage capped at
         # 13/32 cores). 32MB keeps ~2-4 waves per core locally; a real
-        # cluster run overrides via SPARK_MAX_PARTITION_BYTES.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_MAX_PARTITION_BYTES", "33554432"))
+        # cluster run overrides it through ``extra_conf``.
+        .config("spark.sql.files.maxPartitionBytes", "33554432")
         # Local mode: the driver JVM runs every executor thread — size the
         # heap for (cores x partition working set + broadcasts); an 8g heap
         # GC-thrashes at 32 cores and scaling collapses, while an oversized
@@ -132,4 +129,8 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = 2 * spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

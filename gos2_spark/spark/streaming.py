@@ -106,8 +106,9 @@ def fence_index_udf(tileset: TileSet, spark):
     (dozens, broadcast in one payload); use the covering JOIN path for
     thousands of tiles. Int output keeps strings off the Python channel.
     """
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import IntegerType
+
+    from .functions import pandas_udf
 
     from ..kernels import predicates as PR
     from ..kernels import projection as PJ

@@ -121,7 +121,8 @@ def synth_warc_segments(
     import datetime as dt
 
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
+
+    from .functions import pandas_udf
 
     per = docs_per_segment
 

@@ -33,6 +33,37 @@ def test_edit_distance_pairs_planted(spark):
     assert not any(5 in k or 4 in k for k in got)
 
 
+def test_edit_distance_pairs_broadcasts_only_bounded_sides(spark, monkeypatch):
+    """Every side edit_distance_pairs broadcasts has at most as many rows
+    as the input; with ``BROADCAST_MAX_ROWS`` below that count the plan
+    carries no broadcast hint and the pairs are the same."""
+    from gos2_spark.pipeline import graph
+    from gos2_spark.pipeline.dedup import edit_distance_pairs
+
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps"),
+            (2, "the quick brown fax jumps"),
+            (3, "the quack brown fox"),
+            (4, "the quick brown fox"),
+            (5, "completely different text"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def run():
+        out = edit_distance_pairs(docs, title_len=12, prefix_len=2, max_dist=3)
+        plan = out._jdf.queryExecution().analyzed().toString().lower()
+        return sorted(tuple(r) for r in out.collect()), "broadcast" in plan
+
+    hinted_rows, hinted = run()
+    monkeypatch.setattr(graph, "BROADCAST_MAX_ROWS", 4)
+    rows, hint = run()
+    assert hinted and not hint
+    assert rows == hinted_rows
+    assert (1, 3, 1) in rows and (1, 4, 0) in rows
+
+
 def test_edit_distance_length_lower_bound(spark):
     """|len(a)-len(b)| <= max_dist prunes nothing that could match."""
     from gos2_spark.pipeline.dedup import edit_distance_pairs

@@ -4,7 +4,10 @@ A tuning knob that only an environment variable can set is an option no
 caller sees and no test exercises. Plan choices belong in code, derived
 from what the engine can observe (input layout, covering size). Session
 deployment settings (``SPARK_*`` in spark/session.py) are not knobs of
-this kind and stay allowed. Pure AST scan, no Spark.
+this kind and stay allowed, except the two session sizes that are now
+derived or constant: the shuffle partition count (two per core, or the
+``shuffle_partitions`` argument) and the scan split size. Pure AST scan,
+no Spark.
 """
 
 import ast
@@ -12,7 +15,7 @@ import pathlib
 import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
-_KNOB = re.compile(r"GOS2_[A-Z0-9_]*")
+_KNOB = re.compile(r"GOS2_[A-Z0-9_]*|SPARK_SHUFFLE_PARTITIONS|SPARK_MAX_PARTITION_BYTES")
 
 
 def _engine_files():

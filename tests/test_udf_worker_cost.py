@@ -1,0 +1,129 @@
+"""Python-worker fixed cost: engine UDFs drop the worker's zip importers,
+and a TileSet's side frames live in the JVM.
+
+PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+every task; on CPython 3.11/3.12 that re-reads the directory of every
+cached ``zipimporter`` (pyspark.zip, the py4j zip, the Spark core jar).
+The engine's ``pandas_udf`` wrapper drops those finders at every call.
+"""
+
+import ast
+import pathlib
+import sys
+import zipfile
+import zipimport
+from typing import Iterator
+
+import pandas as pd
+from pyspark.rdd import PythonEvalType
+
+from gos2_spark.spark.functions import drop_zip_importers, pandas_udf
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+_WRAPPER_MODULE = "gos2_spark/spark/functions.py"
+
+
+def _zip_finders() -> int:
+    return sum(
+        isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+    )
+
+
+def test_drop_zip_importers_keeps_zip_imports_working(tmp_path, monkeypatch):
+    archive = tmp_path / "mods.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zipmod_first.py", "VALUE = 1\n")
+        zf.writestr("zipmod_second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        import zipmod_first
+
+        assert zipmod_first.VALUE == 1
+        assert isinstance(
+            sys.path_importer_cache.get(str(archive)), zipimport.zipimporter
+        )
+        drop_zip_importers()
+        assert _zip_finders() == 0
+
+        if hasattr(zipimport, "_read_directory"):
+            # the rebuilt finder must come from zipimport's directory cache
+            def reread(path):
+                raise AssertionError(f"archive re-read: {path}")
+
+            monkeypatch.setattr(zipimport, "_read_directory", reread)
+        import zipmod_second
+
+        assert zipmod_second.VALUE == 2
+        assert zipmod_second.__file__.startswith(str(archive))
+    finally:
+        sys.modules.pop("zipmod_first", None)
+        sys.modules.pop("zipmod_second", None)
+        sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_wrapper_keeps_eval_type_inference(spark):
+    @pandas_udf("long")
+    def scalar(x: pd.Series) -> pd.Series:
+        return x
+
+    @pandas_udf("long")
+    def batches(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        yield from it
+
+    @pandas_udf("double")
+    def mean(x: pd.Series) -> float:
+        return float(x.mean())
+
+    assert scalar.evalType == PythonEvalType.SQL_SCALAR_PANDAS_UDF
+    assert batches.evalType == PythonEvalType.SQL_SCALAR_PANDAS_ITER_UDF
+    assert mean.evalType == PythonEvalType.SQL_GROUPED_AGG_PANDAS_UDF
+    assert scalar.__name__ == "scalar"
+
+
+def _engine_files():
+    yield ROOT / "__spark_entry__.py"
+    yield from sorted((ROOT / "gos2_spark").rglob("*.py"))
+    yield from sorted((ROOT / "jobs").rglob("*.py"))
+
+
+def test_engine_takes_pandas_udf_from_the_wrapper():
+    hits = []
+    for path in _engine_files():
+        rel = path.relative_to(ROOT).as_posix()
+        if rel == _WRAPPER_MODULE:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").startswith("pyspark")
+                and any(a.name == "pandas_udf" for a in node.names)
+            ) or (isinstance(node, ast.Attribute) and node.attr == "pandas_udf"):
+                hits.append(f"{rel}:{node.lineno}")
+    assert not hits, "pandas_udf taken from pyspark directly:\n" + "\n".join(hits)
+
+
+def test_worker_holds_no_zip_importer_in_a_wrapped_udf(spark):
+    @pandas_udf("long")
+    def zip_finders(x: pd.Series) -> pd.Series:
+        import sys as _sys
+        import zipimport as _zi
+
+        n = sum(
+            isinstance(f, _zi.zipimporter) for f in _sys.path_importer_cache.values()
+        )
+        return pd.Series([n] * len(x))
+
+    df = spark.range(0, 16, numPartitions=4).select(zip_finders("id").alias("n"))
+    assert len(df.collect()) == 16
+    assert {r.n for r in df.collect()} == {0}
+
+
+def test_tileset_side_frames_are_cached(spark):
+    from gos2_spark.geometry import Loop
+    from gos2_spark.spark.joins import TileSet
+
+    tiles = TileSet({"nyc": Loop.regular(40.7128, -74.0060, 1.5, 16)}, max_cells=16)
+    art = tiles.spark_artifacts(spark)
+    assert art["grid"].is_cached
+    assert art["cov"].is_cached
+    assert tiles.spark_artifacts(spark) is art
