@@ -166,8 +166,10 @@ def _local_contract(sym: DataFrame) -> DataFrame:
             ks = list(parent)
             yield pd.DataFrame({"key": ks, "label": [find(k) for k in ks]})
 
+    from ..spark.functions import dropping_zip_importers
+
     return sym.where(F.col("key_a") < F.col("key_b")).mapInPandas(
-        uf, schema=f"key {kt}, label {kt}"
+        dropping_zip_importers(uf), schema=f"key {kt}, label {kt}"
     )
 
 

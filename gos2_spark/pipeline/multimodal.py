@@ -377,5 +377,7 @@ def extract_features(
                 "features": feats,
             })
 
-    return media.mapInPandas(gen, schema=FEATURE_SCHEMA)
+    from ..spark.functions import dropping_zip_importers
+
+    return media.mapInPandas(dropping_zip_importers(gen), schema=FEATURE_SCHEMA)
 

@@ -13,7 +13,9 @@ CellID convention in DataFrames: **biased signed int64** (raw uint64 XOR
 from __future__ import annotations
 
 import functools
+import inspect
 import sys
+import weakref
 import zipimport
 
 import numpy as np
@@ -58,12 +60,18 @@ def drop_zip_importers() -> None:
             cache.pop(path, None)
 
 
-def _dropping_zip_importers(f):
+def dropping_zip_importers(f):
+    """``f`` that first runs :func:`drop_zip_importers` at every call: the
+    wrapper for engine ``mapInPandas`` / ``applyInPandas`` callables (the
+    engine ``pandas_udf`` applies it itself). It keeps ``f``'s signature,
+    because PySpark reads a grouped-map function's arity with
+    ``inspect.getfullargspec``, which does not follow ``__wrapped__``."""
     @functools.wraps(f)
     def run(*args, **kwargs):
         drop_zip_importers()
         return f(*args, **kwargs)
 
+    run.__signature__ = inspect.signature(f)
     return run
 
 
@@ -75,8 +83,8 @@ def pandas_udf(f=None, returnType=None, functionType=None):
     once is not enough: later first imports rebuild the root importers."""
     if f is None or isinstance(f, (str, DataType)):  # decorator form
         make = _pyspark_pandas_udf(f, returnType, functionType)
-        return lambda fn: make(_dropping_zip_importers(fn))
-    return _pyspark_pandas_udf(_dropping_zip_importers(f), returnType, functionType)
+        return lambda fn: make(dropping_zip_importers(fn))
+    return _pyspark_pandas_udf(dropping_zip_importers(f), returnType, functionType)
 
 
 _BIAS = np.uint64(1 << 63)
@@ -153,14 +161,41 @@ def s2_cell_lng(cell: pd.Series) -> pd.Series:
     return pd.Series(lng)
 
 
+# SparkContext -> the LOOKUP_POS Literal column (see _lookup_pos_column)
+_LOOKUP_POS_COLUMNS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _lookup_pos_column(spark) -> Column:
+    """H.LOOKUP_POS as one array<int> ``Literal``, built once per
+    SparkContext. ``F.lit(list)`` would convert the 1024 ints one py4j call
+    at a time, and a SQL ``array(...)`` string is re-parsed and re-folded in
+    every plan that uses it; here the analyzed ``CreateArray`` is evaluated
+    once in the JVM and its value wrapped as a Literal."""
+    sc = spark.sparkContext
+    col = _LOOKUP_POS_COLUMNS.get(sc)
+    if col is None:
+        sql = "array(" + ",".join(str(int(v)) for v in H.LOOKUP_POS) + ")"
+        arr = (spark.range(1).selectExpr(sql)._jdf.queryExecution()
+               .analyzed().expressions().apply(0).child())
+        jvm = sc._jvm
+        lit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(
+            arr.eval(None), arr.dataType())
+        col = Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(lit))
+        _LOOKUP_POS_COLUMNS[sc] = col
+    return col
+
+
 def add_cellid_sql(df, lat_col: str, lng_col: str, out_col: str = "cell_id"):
     """Add a leaf cell id (bias-encoded int64) as PURE native SQL — no
     Python worker in the loop at all.
 
     Same pipeline as kernels.projection.cellid_from_latlng
     (cellid.go:503-509): lat/lng -> xyz -> face/uv -> st -> ij -> 8 unrolled
-    Hilbert rounds gathering from the constant-folded 1024-entry LOOKUP_POS
-    table (cellid.go:551-576). Built as STAGED projections (one per Hilbert
+    Hilbert rounds gathering from the 1024-entry LOOKUP_POS table
+    (cellid.go:551-576), which enters the plan as ONE array<int> Literal
+    built once per SparkContext (:func:`_lookup_pos_column`), so neither the
+    parser nor the optimizer sees a 1024-child ``array(...)`` per plan.
+    Built as STAGED projections (one per Hilbert
     round): a single Column would nest the recursive ``bits`` chain into a
     2^8-node tree (measured 1.7 MB plan, codegen fallback); with column
     barriers each round references the previous round's *attributes*, the
@@ -230,18 +265,18 @@ def add_cellid_sql(df, lat_col: str, lng_col: str, out_col: str = "cell_id"):
         "*", f"{ij_sql('_s2_u')} AS _s2_i", f"{ij_sql('_s2_v')} AS _s2_j"
     )
 
-    # folded array<int> literal, and the whole 8-round loop, built from SQL
-    # STRINGS: F.lit(list) converts element-by-element over py4j (measured
-    # 0.5-1.4s for these 1024 ints, per plan build) and per-Column operator
-    # chains cost one py4j roundtrip each (~0.7s/plan for the loop's ~240
-    # ops); selectExpr parses each round in ~1ms driver-side.
-    lookup_sql = "array(" + ",".join(str(int(v_)) for v_ in H.LOOKUP_POS) + ")"
+    # The table rides along as the column _s2_lut (FoldablePropagation
+    # inlines the literal into each round's element_at), so the whole
+    # 8-round loop stays SQL STRINGS: per-Column operator chains cost one
+    # py4j roundtrip each (~0.7s/plan for the loop's ~240 ops); selectExpr
+    # parses each round in ~1ms driver-side.
     carried = [f"`{c}`" for c in (*tmp, "_s2_x", "_s2_y", "_s2_z", "_s2_face",
-                                  "_s2_u", "_s2_v", "_s2_i", "_s2_j")]
-    df = df.selectExpr(
+                                  "_s2_u", "_s2_v", "_s2_i", "_s2_j", "_s2_lut")]
+    df = df.select(
         "*",
-        f"shiftleft(CAST(_s2_face AS BIGINT), {H.POS_BITS - 1}) AS _s2_n",
-        "CAST(_s2_face AS BIGINT) & 1 AS _s2_bits",
+        _lookup_pos_column(df.sparkSession).alias("_s2_lut"),
+        F.expr(f"shiftleft(CAST(_s2_face AS BIGINT), {H.POS_BITS - 1})").alias("_s2_n"),
+        F.expr("CAST(_s2_face AS BIGINT) & 1").alias("_s2_bits"),
     )
     for k in range(7, -1, -1):
         key = (
@@ -250,7 +285,7 @@ def add_cellid_sql(df, lat_col: str, lng_col: str, out_col: str = "cell_id"):
         )
         df = df.selectExpr(
             *carried,
-            f"CAST(element_at({lookup_sql}, CAST({key} + 1 AS INT)) AS BIGINT)"
+            f"CAST(element_at(_s2_lut, CAST({key} + 1 AS INT)) AS BIGINT)"
             " AS _s2_nb",
             "_s2_n AS _s2_n0",
         ).selectExpr(
@@ -471,28 +506,6 @@ def rect_contains(
 # --- geoparse ---------------------------------------------------------------
 
 _GEO_RE = r"(-?\d{1,2}\.\d{3,}),\s*(-?\d{1,3}\.\d{3,})"
-
-
-def geoparse(text: Column) -> Column:
-    """[SQL] deterministic lat/lng extraction from page text.
-
-    The reference has no text parsing (SURVEY §2.8) — this is engine-defined:
-    the FIRST "lat, lng" decimal-pair mention, validated to the lat/lng
-    domain. Native regexp (codegen) — no UDF.
-    """
-    lat_s = F.regexp_extract(text, _GEO_RE, 1)
-    lng_s = F.regexp_extract(text, _GEO_RE, 2)
-    lat = F.when(lat_s != "", lat_s.cast("double"))
-    lng = F.when(lng_s != "", lng_s.cast("double"))
-    valid = (
-        lat.isNotNull() & lng.isNotNull()
-        & (lat >= -90.0) & (lat <= 90.0)
-        & (lng >= -180.0) & (lng <= 180.0)
-    )
-    return F.struct(
-        F.when(valid, lat).alias("lat"),
-        F.when(valid, lng).alias("lng"),
-    )
 
 
 def geoparse_all(text: Column) -> Column:

@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .functions import dropping_zip_importers
+
 
 def _half_hull(xs: np.ndarray, ys: np.ndarray) -> list[int]:
     """Indices of one monotone-chain half over points sorted by (x, y).
@@ -99,8 +101,8 @@ def convex_hull_vertices(
     slots = df.sparkSession.sparkContext.defaultParallelism
     pts = pts.repartition(slots, F.col(key_col), F.col("_salt"))
     partial = pts.groupBy(key_col, "_salt").applyInPandas(
-        lambda pdf: chain(pdf), schema=schema
+        dropping_zip_importers(chain), schema=schema
     )
     return partial.groupBy(key_col).applyInPandas(
-        lambda pdf: chain(pdf), schema=schema
+        dropping_zip_importers(chain), schema=schema
     )

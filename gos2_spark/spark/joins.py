@@ -407,8 +407,13 @@ def point_in_polygon_join(
     refine = art["refine"]
     grid = art["grid"]
 
+    # Every DataFrame step re-analyzes the whole input plan, so the join is
+    # built in as few steps as the plan allows (one per Project, Join and
+    # Filter that cannot be folded into another).
+    #
     # cheap codegen prefilter: disjoint covering ranges reject rows far from
-    # every tile BEFORE the grid probe
+    # every tile BEFORE the grid probe. It sits in the join condition, and
+    # the optimizer pushes it below the probe onto the points side
     # (built as ONE parsed SQL string: a per-range Column chain costs ~2
     # py4j roundtrips per range per plan build)
     pre = F.expr(
@@ -417,20 +422,19 @@ def point_in_polygon_join(
         )
         or "false"
     )
-    all_points = points  # anti-join must see unfiltered rows
-    points = points.where(pre)
 
     # one ancestor key + one broadcast hash probe per point: the grid table
     # carries each covering cell's original leaf range, so the equi probe +
     # BETWEEN yields exactly the covering's match set
-    pts = points.withColumn("_gk", s2_parent_sql(F.col(cell_col), art["grid_level"]))
+    pts = points.select("*", s2_parent_sql(F.col(cell_col), art["grid_level"]).alias("_gk"))
     joined = pts.join(
         F.broadcast(grid),
-        (pts["_gk"] == grid["grid_key"])
+        pre
+        & (pts["_gk"] == grid["grid_key"])
         & (F.col(cell_col) >= F.col("g_rmin"))
         & (F.col(cell_col) <= F.col("g_rmax")),
         "inner",
-    ).select(*points.columns, "tile_idx", "is_interior")
+    )
 
     # REBALANCE matched rows before refinement: with cell-clustered FILES
     # (e.g. one file per coarse cell / per city) all rows matching a tile
@@ -446,22 +450,15 @@ def point_in_polygon_join(
     # scan partitions. Keep it on for hot-file layouts.
     if rebalance:
         joined = joined.repartition(spark.sparkContext.defaultParallelism * 2)
-    matched = (
-        joined
-        .withColumn(
-            "inside",
-            refine(F.col("tile_idx"), F.col("lat"), F.col("lng"), F.col("is_interior")),
-        )
-        .where(F.col("inside"))
-        .drop("inside")
-    )
 
-    # map the integer index back to the user-facing tile id
+    # refine in the filter (one ArrowEvalPython below it), then map the
+    # integer index back to the user-facing tile id
     name_arr = F.array(*[F.lit(str(t)) for t in tileset.tile_ids()])
-    matched = matched.withColumn(
-        "tile_id", F.element_at(name_arr, F.col("tile_idx") + 1)
+    inner = joined.where(
+        refine(F.col("tile_idx"), F.col("lat"), F.col("lng"), F.col("is_interior"))
+    ).select(
+        *points.columns, F.element_at(name_arr, F.col("tile_idx") + 1).alias("tile_id")
     )
-    inner = matched.select(*points.columns, "tile_id")
 
     if how == "inner":
         return inner
@@ -469,7 +466,7 @@ def point_in_polygon_join(
         return inner.select(*points.columns).dropDuplicates([point_key])
     if how == "anti":
         keys = inner.select(point_key).distinct()
-        return all_points.join(keys, on=point_key, how="left_anti")
+        return points.join(keys, on=point_key, how="left_anti")
     raise ValueError(f"unknown how {how!r}")
 
 

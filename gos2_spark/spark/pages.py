@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions import geoparse, s2_cellid
-
 # (name, lat, lng, weight) — heavier cities create deliberate hot cells.
 CITIES = [
     ("nyc", 40.7128, -74.0060, 12),
@@ -124,14 +122,20 @@ def geoparsed_pages(
 ) -> DataFrame:
     """pages -> (keep..., lat, lng, cell_id); rows without a location drop.
 
-    Plan shape matters here. The regex runs exactly once per row behind a
-    Generate barrier (a native regexp_extract gets re-evaluated by Catalyst
-    at every consuming operator; we measured 9 copies in the join plan) and
-    stays in the JVM. The Hilbert encode is ALSO pure Spark SQL
-    (functions.add_cellid_sql) so the whole indexing path has no Python
-    worker at all — measured 3.1x faster than the Arrow kernel and
-    bit-identical over 10M-point corpora. ``level`` adds a parent-cell
-    join key via pure bitwise SQL.
+    Plan shape matters here. Two Generate barriers make each expensive
+    expression run exactly once per row, in the JVM:
+    - the regex, behind ``explode(array(m))`` (a native regexp_extract gets
+      re-evaluated by Catalyst at every consuming operator; we measured 9
+      copies in the join plan);
+    - the lat/lng string->double parse, behind
+      ``inline(array(struct(lat, lng)))``. Without it Catalyst pushes the
+      range filter through the projection, so each cast ran three times
+      per row, and with ``url`` carried the fused stage outgrew the JVM's
+      8,000-byte JIT limit and ran interpreted.
+    The Hilbert encode is ALSO pure Spark SQL (functions.add_cellid_sql)
+    so the whole indexing path has no Python worker at all — measured 3.1x
+    faster than the Arrow kernel and bit-identical over 10M-point corpora.
+    ``level`` adds a parent-cell join key via pure bitwise SQL.
     """
     from .functions import _GEO_RE, add_cellid_sql
 
@@ -145,7 +149,10 @@ def geoparsed_pages(
     parts = F.split(F.col("_m"), ",")
     lat = F.trim(parts.getItem(0)).cast("double")
     lng = F.trim(parts.getItem(1)).cast("double")
-    out = g.select(*keep, lat.alias("lat"), lng.alias("lng")).where(
+    # second barrier: lat/lng become concrete attributes, so the range
+    # filter below stops here instead of copying the casts into itself
+    latlng = F.inline(F.array(F.struct(lat.alias("lat"), lng.alias("lng"))))
+    out = g.select(*keep, latlng).where(
         (F.col("lat") >= -90.0) & (F.col("lat") <= 90.0)
         & (F.col("lng") >= -180.0) & (F.col("lng") <= 180.0)
     )

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions import dropping_zip_importers
 from .joins import TileSet, point_in_polygon_join
 from .pages import geoparsed_pages
 
@@ -203,7 +204,8 @@ def streaming_geofence_transitions(
             )
 
     return labeled.groupBy(user_col).applyInPandasWithState(
-        fn, out_schema, "last int", "append", GroupStateTimeout.NoTimeout
+        dropping_zip_importers(fn), out_schema, "last int", "append",
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -260,7 +262,8 @@ def streaming_ttl_dedup(
             yield pd.DataFrame(recs, columns=[user_col, seq_col, "kept_us"])
 
     return labeled.groupBy(user_col).applyInPandasWithState(
-        fn, out_schema, "last long", "append", GroupStateTimeout.NoTimeout
+        dropping_zip_importers(fn), out_schema, "last long", "append",
+        GroupStateTimeout.NoTimeout,
     )
 
 

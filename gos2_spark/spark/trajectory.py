@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .functions import haversine_rad
+from .functions import dropping_zip_importers, haversine_rad
 
 __all__ = [
     "directed_hausdorff",
@@ -416,7 +416,7 @@ def simplify_trajectories(
     pinned = points.repartition(slots, F.col(key_col)).sortWithinPartitions(
         key_col, *order_list
     )
-    return pinned.select(*cols).mapInPandas(fn, schema=out_schema)
+    return pinned.select(*cols).mapInPandas(dropping_zip_importers(fn), schema=out_schema)
 
 
 def frechet_distance_col(xyz_a: Column, xyz_b: Column) -> Column:

@@ -190,4 +190,6 @@ def read_warc_segments(
                 {"url": urls, "warc_ts": tss, "html": htmls}
             )
 
-    return segments.mapInPandas(gen, schema=PAGE_SCHEMA)
+    from .functions import dropping_zip_importers
+
+    return segments.mapInPandas(dropping_zip_importers(gen), schema=PAGE_SCHEMA)

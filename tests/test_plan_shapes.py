@@ -871,3 +871,101 @@ def test_session3_batches_no_python_stage(spark, name):
     plan = _plan(spark, name)
     assert "BatchEvalPython" not in plan and "ArrowEval" not in plan, name
     assert "FlatMapGroupsInPandas" not in plan, name
+
+
+# --- geoparse on read ------------------------------------------------------
+
+def _small_pages(spark):
+    """synth_pages plus hand-made rows: an out-of-domain lat, an
+    out-of-domain lng, two mentions (the first one counts) and none."""
+    import datetime as dt
+
+    from gos2_spark.spark.pages import synth_pages
+
+    pages = synth_pages(spark, 400, 4)
+    ts = dt.datetime(2024, 3, 1, 12, 0, 0)
+    extra = spark.createDataFrame(
+        [
+            (f"https://edge.example/{i}", ts, text.encode(), text, "en")
+            for i, text in enumerate([
+                "out of range 95.123456, 10.123456 here",
+                "out of range -12.500000, 190.250000 here",
+                "first 10.500000, -20.250000 then 30.125000, 40.750000",
+                "no coordinates at all",
+                "tight -0.001000,179.999000",
+            ])
+        ],
+        pages.schema,
+    )
+    return pages.unionByName(extra)
+
+
+def test_geoparsed_pages_parses_each_coordinate_once(spark):
+    """The lat/lng string->double parse sits behind its own Generate
+    barrier, so the pushed-down range filter cannot copy it: one cast per
+    coordinate in the executed plan (the filter used to hold four more)."""
+    from gos2_spark.spark.pages import geoparsed_pages
+
+    df = geoparsed_pages(_small_pages(spark))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    casts = re.findall(r"cast\(trim\(split\(_m\S*, ,, -1\)\[(\d)\]", plan)
+    assert sorted(casts) == ["0", "1"], plan
+
+
+def test_add_cellid_sql_lookup_table_is_one_literal(spark):
+    """The 1,024-entry Hilbert table enters the analyzed plan as an array
+    Literal, never as a 1,024-child array(...) for the optimizer to fold."""
+    from gos2_spark.spark.functions import add_cellid_sql
+
+    pts = spark.createDataFrame([(40.7128, -74.006)], "lat double, lng double")
+    qe = add_cellid_sql(pts, "lat", "lng")._jdf.queryExecution()
+    # toJSON, not toString: the plan string truncates long argument lists
+    arrays = re.findall(
+        r'"class":"org\.apache\.spark\.sql\.catalyst\.expressions\.CreateArray",'
+        r'"num-children":(\d+)',
+        qe.analyzed().toJSON(),
+    )
+    assert max(map(int, arrays), default=0) < 1024, arrays
+    assert "[0,1,682,683," in qe.analyzed().toString()
+    assert "element_at([0,1,682,683," in qe.executedPlan().toString()
+
+
+def test_geoparsed_pages_matches_arrow_regex_and_kernel(spark):
+    """Rows of geoparsed_pages(keep=(url, warc_ts)) equal a pyarrow regex
+    parse of the same text, and cell_id equals the s2_cellid kernel."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from gos2_spark.kernels import projection as PJ
+    from gos2_spark.spark.functions import _GEO_RE
+    from gos2_spark.spark.pages import geoparsed_pages
+
+    named = r"(?P<lat>-?\d{1,2}\.\d{3,}),\s*(?P<lng>-?\d{1,3}\.\d{3,})"
+    assert named.replace("?P<lat>", "").replace("?P<lng>", "") == _GEO_RE
+
+    pages = _small_pages(spark)
+    src = pa.Table.from_pylist(
+        [r.asDict() for r in pages.select("url", "warc_ts", "text").collect()]
+    )
+    m = pc.extract_regex(src.column("text"), named)
+    keep = pc.is_valid(m)
+    m = m.filter(keep)
+    lat = pc.cast(pc.struct_field(m, "lat"), "float64").to_numpy()
+    lng = pc.cast(pc.struct_field(m, "lng"), "float64").to_numpy()
+    ok = (lat >= -90) & (lat <= 90) & (lng >= -180) & (lng <= 180)
+    urls = np.asarray(src.column("url").filter(keep).to_pylist(), dtype=object)[ok]
+    tss = np.asarray(src.column("warc_ts").filter(keep).to_pylist(), dtype=object)[ok]
+    lat, lng = lat[ok], lng[ok]
+    cells = (PJ.cellid_from_latlng(lat, lng) ^ np.uint64(1 << 63)).view(np.int64)
+    expected = sorted(zip(urls, tss, lat.tolist(), lng.tolist(), cells.tolist()))
+
+    got = sorted(
+        tuple(r)
+        for r in geoparsed_pages(pages, keep=("url", "warc_ts")).collect()
+    )
+    assert len(expected) > 300
+    assert "https://edge.example/0" not in {g[0] for g in got}
+    assert "https://edge.example/1" not in {g[0] for g in got}
+    assert ("https://edge.example/2", 10.5, -20.25) in {g[:1] + g[2:4] for g in got}
+    assert got == expected

@@ -4,7 +4,9 @@ and a TileSet's side frames live in the JVM.
 PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task; on CPython 3.11/3.12 that re-reads the directory of every
 cached ``zipimporter`` (pyspark.zip, the py4j zip, the Spark core jar).
-The engine's ``pandas_udf`` wrapper drops those finders at every call.
+The engine's ``pandas_udf`` wrapper drops those finders at every call, and
+every engine ``mapInPandas`` / ``applyInPandas`` callable is wrapped with
+``dropping_zip_importers`` for the same reason.
 """
 
 import ast
@@ -17,7 +19,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.rdd import PythonEvalType
 
-from gos2_spark.spark.functions import drop_zip_importers, pandas_udf
+from gos2_spark.spark.functions import (
+    drop_zip_importers, dropping_zip_importers, pandas_udf,
+)
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 _WRAPPER_MODULE = "gos2_spark/spark/functions.py"
@@ -100,6 +104,76 @@ def test_engine_takes_pandas_udf_from_the_wrapper():
             ) or (isinstance(node, ast.Attribute) and node.attr == "pandas_udf"):
                 hits.append(f"{rel}:{node.lineno}")
     assert not hits, "pandas_udf taken from pyspark directly:\n" + "\n".join(hits)
+
+
+# DataFrame / GroupedData methods that run a Python callable per task
+_MAP_METHODS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow",
+    "applyInPandasWithState",
+}
+
+
+def test_engine_map_callables_drop_zip_importers():
+    """Every engine mapInPandas/applyInPandas callable is passed as
+    ``dropping_zip_importers(fn)``."""
+    sites, hits = 0, []
+    for path in _engine_files():
+        rel = path.relative_to(ROOT).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), filename=rel)):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _MAP_METHODS
+            ):
+                continue
+            sites += 1
+            fn = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "func"), None
+            )
+            if not (
+                isinstance(fn, ast.Call)
+                and isinstance(fn.func, ast.Name)
+                and fn.func.id == "dropping_zip_importers"
+            ):
+                hits.append(f"{rel}:{node.lineno}")
+    assert sites >= 8
+    assert not hits, "unwrapped engine map callables:\n" + "\n".join(hits)
+
+
+def test_wrapped_map_callables_keep_arity_and_drop_finders(spark):
+    """applyInPandas reads the callable's arity (key or no key) with
+    getfullargspec, so the wrapper must keep it; a wrapped mapInPandas
+    callable sees no zip finder in its worker once its imports are done."""
+    df = spark.createDataFrame([(1, 2.0), (1, 3.0), (2, 5.0)], "k long, v double")
+
+    def no_key(pdf):
+        return pdf.assign(v=pdf.v.sum())
+
+    def with_key(key, pdf):
+        return pdf.assign(v=float(key[0]))
+
+    g = df.groupBy("k")
+    got = g.applyInPandas(dropping_zip_importers(no_key), schema=df.schema)
+    assert sorted(map(tuple, got.collect())) == [(1, 5.0), (1, 5.0), (2, 5.0)]
+    got = g.applyInPandas(dropping_zip_importers(with_key), schema=df.schema)
+    assert sorted(map(tuple, got.collect())) == [(1, 1.0), (1, 1.0), (2, 2.0)]
+
+    def zip_finders(it):
+        import sys as _sys
+        import zipimport as _zi
+
+        for pdf in it:
+            n = sum(
+                isinstance(f, _zi.zipimporter)
+                for f in _sys.path_importer_cache.values()
+            )
+            yield pd.DataFrame({"n": [n] * len(pdf)})
+
+    out = spark.range(0, 16, numPartitions=4).mapInPandas(
+        dropping_zip_importers(zip_finders), schema="n long"
+    )
+    assert len(out.collect()) == 16  # first imports may rebuild finders
+    assert {r.n for r in out.collect()} == {0}
 
 
 def test_worker_holds_no_zip_importer_in_a_wrapped_udf(spark):
