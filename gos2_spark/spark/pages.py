@@ -130,8 +130,9 @@ def geoparsed_pages(
     - the lat/lng string->double parse, behind
       ``inline(array(struct(lat, lng)))``. Without it Catalyst pushes the
       range filter through the projection, so each cast ran three times
-      per row, and with ``url`` carried the fused stage outgrew the JVM's
-      8,000-byte JIT limit and ran interpreted.
+      per row, and with ``url`` carried the fused stage's largest method
+      grew to 8,417 bytes of bytecode (7,310 with the barrier), past the
+      JVM's 8,000-byte JIT limit, and ran interpreted.
     The Hilbert encode is ALSO pure Spark SQL (functions.add_cellid_sql)
     so the whole indexing path has no Python worker at all — measured 3.1x
     faster than the Arrow kernel and bit-identical over 10M-point corpora.
