@@ -7,11 +7,13 @@ Scale shape (10^9 domains, 10^11 edges):
 * out-degrees are computed ONCE and joined into the edge table up front,
   so each power iteration is exactly one shuffle-join (ranks on src) plus
   one map-side-combined groupBy (contributions on dst);
-* every iterative loop truncates its lineage once per round through the
-  round helpers below (``_truncate`` for fixed-count loops,
-  ``_checkpoint_any`` for loops that stop on a condition): a local
-  checkpoint without a checkpoint dir, a reliable one with it — lineage
-  stays O(1) deep (same policy as pipeline.dedup.minhash_dedup_groups);
+* an iterative loop whose round reads its state more than once truncates
+  its lineage every round through the round helpers below (``_truncate``
+  for fixed-count loops, ``_checkpoint_any`` for loops that stop on a
+  condition): a local checkpoint without a checkpoint dir, a reliable one
+  with it — lineage stays O(1) deep (same policy as
+  pipeline.dedup.minhash_dedup_groups); ``sssp_relax``, whose round reads
+  it once, runs unrolled (see ``_truncate``);
 * dangling mass (nodes with no out-edges) is folded into the contribution
   aggregate as a broadcast 1-row total (flowed mass == sum(contrib)) and
   redistributed uniformly — never a join, never a driver collect: with no
@@ -59,6 +61,10 @@ def _reset_huge_stats(df: DataFrame, bit_limit: int = 128) -> DataFrame:
 
 
 BROADCAST_MAX_ROWS = 4_000_000
+# sssp_relax's cost table is ONE partition up to this many edges: 8 rounds
+# on 4 cores won up to 3M edges on random graphs, and lost at 4M with every
+# node reached (9.9 s vs 7.9 s for hash rounds). More cores move it lower.
+SINGLE_PARTITION_MAX_EDGES = 2_000_000
 
 
 def _default_materialize(spark, eager: bool = True):
@@ -87,7 +93,12 @@ def _truncate(df: DataFrame) -> DataFrame:
     one, the eager reliable checkpoint. The lazy form launches no job only
     for a plan with no exchange: producing the checkpoint's RDD runs the
     round's shuffle stages, one job each under AQE (a 3-round groupBy/join
-    probe launched 2 jobs here with AQE, 3 without)."""
+    probe launched 2 jobs here with AQE, 3 without).
+
+    A loop whose round reads its state ONCE and joins a bounded broadcast
+    should not cut per round (``sssp_relax``): unrolled, its plan grows
+    linearly, while each cut re-plans the query and rebuilds the
+    broadcast (8 rounds over 1M edges: 6.5 s cut, 1.3-1.6 s unrolled)."""
     return _default_materialize(df.sparkSession, eager=False)(df)
 
 
@@ -381,24 +392,11 @@ def connected_components(
         )
 
     def _one_round(cur: DataFrame, carry: tuple = ()) -> DataFrame:
-        # ONE hash-to-min round, as a lazy plan over `cur` (key, label,
-        # *carry) — `carry` columns ride through untouched:
-        #   1. neighbor-min — every node sees the min label across its
-        #      graph edges (the only step that moves information across
-        #      the graph);
-        #   2. pointer chase — candidates jump up to 2 stale-pointer
-        #      steps through the in-plan composed mapping (free
-        #      shortcuts, no extra materialization);
-        #   3. fragment broadcast — grouping by each node's CHASED root
-        #      and taking the min candidate spreads a discovery made at
-        #      any boundary node to the ENTIRE fragment in the same
-        #      round. Without this step the minimum enters a fragment
-        #      only one graph hop per round (pointers all point at the
-        #      old root, which never heard the news) — measured 25+
-        #      non-converged rounds on the sf0.1 eps-graph; with it,
-        #      fragments merge along every boundary every round and the
-        #      count of distinct labels drops geometrically (hash-to-min,
-        #      Rastogi et al.).
+        # ONE hash-to-min round (the docstring's three steps) as a lazy
+        # plan over `cur` (key, label, *carry); `carry` columns ride
+        # through untouched, and the chase takes up to 2 stale-pointer
+        # steps through the in-plan composed mapping. Without step 3 the
+        # sf0.1 eps-graph ran 25+ rounds without converging.
         mk = _chase_mapping(
             cur.select(F.col("key").alias("_lk"), F.col("label").alias("_ll"))
         )
@@ -735,7 +733,6 @@ def bfs_hops(
     The fixed ``max_hops`` cap makes the computation statically unrollable,
     so a recursive-CTE oracle capped at the same depth replays it exactly.
     """
-    mat = _default_materialize(edges.sparkSession)
     # materialize the deduped edge projection ONCE: every level's plan
     # would otherwise re-run the caller's edge derivation AND the
     # distinct shuffle (measured: the dominant cost of small-graph BFS)
@@ -744,7 +741,7 @@ def bfs_hops(
         .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .distinct()
     )
-    dist = mat(
+    dist = (
         sources.select(F.col(node_col).alias(node_col))
         .distinct()
         .withColumn("hops", F.lit(0).cast("int"))
@@ -797,46 +794,49 @@ def sssp_relax(
     Bellman-Ford relaxation sweeps — weighted link distance, crawl cost
     budgeting, latency-bounded reachability.
 
-    Each sweep is min-plus: candidate costs flow along every edge out of
-    the current table (ONE shuffle join keyed on the source), then a
-    map-side-combined min-agg merges candidates with the standing costs.
-    After ``k`` sweeps every node whose shortest path uses <= k edges holds
-    its final cost; with ``rounds >= longest shortest-path edge count`` the
-    result is the exact SSSP fixpoint (negative edges are rejected).
+    Each sweep is min-plus over ONE read of the cost table: a left join
+    with the edges emits every node's standing cost and ``cost + w`` at
+    each out-neighbour (``inline`` of a two-struct array), and a min-agg
+    keyed on the node merges them. After ``k`` sweeps every node whose
+    shortest path uses <= k edges holds its final cost (negative and null
+    weights are dropped; a null node is no node).
 
-    Scale shape: per round one edge join + one min groupBy, both keyed —
-    co-partitionable end to end; the cost table is bounded by reached
-    nodes; lineage truncates per round (same policy as
-    ``connected_components``). The FIXED round count keeps the whole
-    computation a statically unrollable DAG, so a chained-CTE oracle
-    replays it exactly — and with integer weights every cost compares
-    exactly cross-engine.
+    Scale shape: the edges are truncated and counted once, the count
+    gating their broadcast; the sweeps form one linear plan with no
+    checkpoint, in which ``ReuseExchange`` builds the broadcast once. Up
+    to ``SINGLE_PARTITION_MAX_EDGES`` the cost table is one partition,
+    which already satisfies the min-agg's clustering, so the sweeps add
+    no exchange; above it each sweep hash-exchanges its messages. The
+    FIXED round count keeps the computation a statically unrollable DAG,
+    so a chained-CTE oracle replays it exactly, and integer weights
+    compare exactly cross-engine.
     """
-    mat = _default_materialize(edges.sparkSession)
-    # materialize the edge table ONCE: every sweep's plan would otherwise
-    # embed (and re-run) the caller's full edge derivation
-    e = _broadcast_bounded(
+    e = _truncate(
         edges.select(
             F.col(src_col).alias("_s"),
             F.col(dst_col).alias("_d"),
             F.col(weight_col).alias("_w"),
         ).where(F.col("_w") >= 0)
     )
-    dist = mat(
-        sources.select(F.col(node_col).alias(node_col))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
+    n = e.count()
+    e = _broadcast_bounded(e, n)
+    dist = sources.select(F.col(node_col).alias(node_col)).distinct().select(
+        node_col, F.lit(0).cast("long").alias("cost")
     )
-    for _ in range(rounds):
-        cand = dist.join(e, dist[node_col] == e["_s"]).select(
+    if n <= SINGLE_PARTITION_MAX_EDGES:
+        dist = dist.coalesce(1)
+    msgs = F.inline(F.array(
+        F.struct(node_col, "cost"),
+        F.struct(
             F.col("_d").alias(node_col),
             (F.col("cost") + F.col("_w")).cast("long").alias("cost"),
-        )
-        new_dist = dist.union(cand).groupBy(node_col).agg(
-            F.min("cost").alias("cost")
-        )
-        dist = _truncate(new_dist)
-    return dist
+        ),
+    ))
+    for _ in range(rounds):
+        dist = dist.join(e, F.col(node_col) == F.col("_s"), "left").select(
+            msgs
+        ).groupBy(node_col).agg(F.min("cost").alias("cost"))
+    return dist.where(F.col(node_col).isNotNull())
 
 
 def label_propagation(
@@ -1123,17 +1123,17 @@ def closeness_from_seeds(
     frontier) per round with per-round lineage truncation; the hop
     table is k-bounded per node.
     """
-    spark = edges.sparkSession
-    mat = _default_materialize(spark)
+    from ..spark.session import literal_frame
+
     e = _broadcast_bounded(
         edges.select(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d"))
         .where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
         .distinct()
     )
-    dist = mat(
-        spark.createDataFrame(
-            [(int(s), int(s)) for s in seed_ids], "seed long, node long"
-        ).withColumn("hops", F.lit(0).cast("int"))
+    dist = literal_frame(
+        edges.sparkSession,
+        [(int(s), int(s), 0) for s in seed_ids],
+        "seed long, node long, hops int",
     )
     dist = _bfs_levels(e, dist, ["seed", "node"], max_hops)
     allh = dist.select("node", "hops")

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spark.session import literal_frame
+
 __all__ = [
     "tokenize",
     "inverted_index",
@@ -121,7 +123,7 @@ def bm25_topk(
         }
     )
     spark = docs.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, token string")
+    qdf = literal_frame(spark, qterms, "query_id long, token string")
 
     dl = toks.groupBy("key").agg(F.count("*").alias("dl"))
     stats = dl.agg(
@@ -274,7 +276,7 @@ def dirichlet_ql_topk(
         {(qid, t) for qid, text in queries for t in text.lower().split() if t}
     )
     spark = docs.sparkSession
-    qdf = spark.createDataFrame(qterms, "query_id long, token string")
+    qdf = literal_frame(spark, qterms, "query_id long, token string")
     term_set = sorted({t for _, t in qterms})
 
     dl = toks.groupBy("key").agg(F.count("*").alias("dl"))

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
 from ..spark.functions import pandas_udf
+from ..spark.session import literal_frame
 
 
 def _qmat_udf(queries: np.ndarray, normalize: bool):
@@ -141,7 +142,7 @@ def lsh_topk(
         for b in range(bands):
             qrows.append((str(qid), b, (int(s) >> (b * bits_per_band)) & mask))
     spark = emb_df.sparkSession
-    qdf = spark.createDataFrame(qrows, "qid string, band int, band_val long")
+    qdf = literal_frame(spark, qrows, "qid string, band int, band_val long")
 
     cand = None
     for b in range(bands):
@@ -316,7 +317,7 @@ def ivf_topk(
         for c in np.argsort(-scores)[:nprobe]:
             probe_rows.append((str(qid), int(c)))
     spark = emb_df.sparkSession
-    probes = spark.createDataFrame(probe_rows, "qid string, list_id int")
+    probes = literal_frame(spark, probe_rows, "qid string, list_id int")
     cand = data.join(F.broadcast(probes), "list_id", "inner")
 
     score_udf = _qmat_udf(Q, normalize=True)

@@ -659,6 +659,10 @@ def along_track_rad(
     )
 
 
+# sessions whose widen_to_parallelism size gate has failed (and warned)
+_WIDEN_GATE_WARNED: weakref.WeakSet = weakref.WeakSet()
+
+
 def widen_to_parallelism(
     df, min_fraction: float = 0.5, min_bytes: int = 4 << 20
 ):
@@ -675,11 +679,11 @@ def widen_to_parallelism(
     pre-exchange work dominates (quadratic candidate generation, n-gram
     explosion), never blanket. Wide inputs pass through untouched, so an
     already-parallel 100-TB scan pays nothing — and TINY inputs (the
-    size-estimate gate; unknown estimates count as large) also pass
-    through, because below a few MB the exchange plus 32-task scheduling
-    costs more than the single-core stage it parallelizes (measured:
-    the same widen that wins 2x on a 16MB corpus loses ~0.5s per query
-    on the 1.6MB one).
+    size-estimate gate) also pass through, because below a few MB the
+    exchange plus 32-task scheduling costs more than the single-core
+    stage it parallelizes (measured: the same widen that wins 2x on a
+    16MB corpus loses ~0.5s per query on the 1.6MB one). An unknown
+    estimate counts as large, with one warning per session.
     """
     slots = df.sparkSession.sparkContext.defaultParallelism
     try:
@@ -695,6 +699,14 @@ def widen_to_parallelism(
         )
         if est < min_bytes:
             return df
-    except Exception:
-        pass  # unknown estimate counts as large: widen
+    except Exception as exc:  # unknown estimate counts as large: widen
+        if df.sparkSession not in _WIDEN_GATE_WARNED:
+            _WIDEN_GATE_WARNED.add(df.sparkSession)
+            import logging
+
+            logging.getLogger(__name__).warning(
+                "widen_to_parallelism: no size estimate (%r), so inputs "
+                "below %d bytes are widened too; warned once per session",
+                exc, min_bytes,
+            )
     return df.repartition(slots)

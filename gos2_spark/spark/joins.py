@@ -32,6 +32,7 @@ from ..kernels import predicates as PR
 from ..kernels import projection as PJ
 from .functions import pandas_udf
 from .pages import s2_parent_sql
+from .session import literal_frame
 
 _BIAS = np.uint64(1 << 63)
 
@@ -881,8 +882,8 @@ def knn_join_df(
     if not parts:
         if own_cache:
             pts.unpersist()
-        return spark.createDataFrame(
-            [], "_qkey string, _pkey string, knn_rank int, dist_rad double"
+        return literal_frame(
+            spark, [], "_qkey string, _pkey string, knn_rank int, dist_rad double"
         ).select(
             F.col("_qkey").alias(query_key), F.col("_pkey").alias(point_key),
             "knn_rank", "dist_rad",
@@ -1212,7 +1213,7 @@ def route_proximity_join(
 
     spark = points.sparkSession
     cells_df = F.broadcast(
-        spark.createDataFrame([(c,) for c in cand], "_rc long")
+        literal_frame(spark, [(c,) for c in cand], "_rc long")
     )
     pref = points.join(
         cells_df, s2_parent_sql(F.col(cell_col), level) == F.col("_rc")

@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _GIB = 1 << 30
 # Heap cap: measured best for the sf0.1 + 2M-page workloads on 32 cores.
@@ -134,3 +134,29 @@ def get_spark(
         shuffle_partitions = 2 * spark.sparkContext.defaultParallelism
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return spark
+
+
+def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples) with ``schema`` (a DDL
+    string or a ``StructType``) that Spark plans as a ``LocalRelation``.
+
+    ``spark.createDataFrame(rows, schema)`` over Python rows is a Python
+    RDD: every execution of it starts Python-worker tasks (a 2-row
+    ``distinct().collect()`` took 0.43-0.49 s, against 0.14-0.15 s from
+    an Arrow table, on 4 cores). An Arrow table small enough for
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation``: the rows live in the plan, and reading them is a
+    JVM-only scan. Meant for string, numeric and boolean columns: Arrow
+    reads a naive ``datetime`` as UTC, not in the session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -24,6 +24,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from .session import literal_frame
+
 
 def getis_ord_gistar(
     counts: DataFrame,
@@ -1187,7 +1189,8 @@ def empty_space_fj(
     from .joins import knn_join_df
 
     spark = points.sparkSession
-    grid = spark.createDataFrame(
+    grid = literal_frame(
+        spark,
         [(int(t), float(la), float(lo)) for t, la, lo in test_points],
         "tid long, glat double, glng double",
     ).select(

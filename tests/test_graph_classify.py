@@ -546,24 +546,14 @@ def test_bfs_hops_max_hops_cap(spark):
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
 
 
-def test_sssp_relax_matches_dijkstra(spark):
-    """Weighted digraph with a cheap long path beating an expensive short
-    one, a cycle, and an unreachable node: engine == heapq Dijkstra."""
+def _dijkstra(edges, sources):
     import heapq
 
-    from gos2_spark.pipeline.graph import sssp_relax
-
-    edges = [
-        (0, 1, 10), (0, 2, 1), (2, 3, 1), (3, 1, 1),   # 0->1 via 2,3 costs 3
-        (1, 4, 2), (4, 0, 5),                           # cycle back
-        (5, 6, 7),                                      # unreachable island
-        (0, 2, 4),                                      # parallel edge, worse
-    ]
     adj: dict[int, list[tuple[int, int]]] = {}
     for s, d, w in edges:
         adj.setdefault(s, []).append((d, w))
-    ref = {0: 0}
-    pq = [(0, 0)]
+    ref = {s: 0 for s in sources}
+    pq = [(0, s) for s in sources]
     while pq:
         c, u = heapq.heappop(pq)
         if c > ref.get(u, 1 << 60):
@@ -572,24 +562,99 @@ def test_sssp_relax_matches_dijkstra(spark):
             if c + w < ref.get(v, 1 << 60):
                 ref[v] = c + w
                 heapq.heappush(pq, (c + w, v))
-
-    e_df = spark.createDataFrame(edges, "src long, dst long, w long")
-    s_df = spark.createDataFrame([(0,)], "node long")
-    got = {r["node"]: r["cost"] for r in sssp_relax(e_df, s_df, rounds=6).collect()}
-    assert got == ref
+    return ref
 
 
-def test_sssp_relax_round_cap_partial(spark):
+def _sssp(spark, edges, sources, rounds):
     from gos2_spark.pipeline.graph import sssp_relax
 
-    chain = [(i, i + 1, 1) for i in range(10)]
-    e_df = spark.createDataFrame(chain, "src long, dst long, w long")
-    s_df = spark.createDataFrame([(0,)], "node long")
-    got = {
+    e_df = spark.createDataFrame(edges, "src long, dst long, w long")
+    s_df = spark.createDataFrame([(s,) for s in sources], "node long")
+    return {
         r["node"]: r["cost"]
-        for r in sssp_relax(e_df, s_df, rounds=4).collect()
+        for r in sssp_relax(e_df, s_df, rounds=rounds).collect()
     }
-    assert got == {i: i for i in range(5)}
+
+
+def _both_partitionings(monkeypatch):
+    """Yield twice: with the cost table in one partition (the default for
+    small graphs), then with one hash exchange per round."""
+    from gos2_spark.pipeline import graph
+
+    yield
+    monkeypatch.setattr(graph, "SINGLE_PARTITION_MAX_EDGES", 0)
+    yield
+
+
+def test_sssp_relax_matches_dijkstra(spark, monkeypatch):
+    """Weighted digraph with a cheap long path beating an expensive short
+    one, a cycle, and an unreachable node: engine == heapq Dijkstra, on
+    both partitionings of the cost table."""
+    edges = [
+        (0, 1, 10), (0, 2, 1), (2, 3, 1), (3, 1, 1),   # 0->1 via 2,3 costs 3
+        (1, 4, 2), (4, 0, 5),                           # cycle back
+        (5, 6, 7),                                      # unreachable island
+        (0, 2, 4),                                      # parallel edge, worse
+    ]
+    for _ in _both_partitionings(monkeypatch):
+        assert _sssp(spark, edges, [0], rounds=6) == _dijkstra(edges, [0])
+
+
+def test_sssp_relax_round_cap_partial(spark, monkeypatch):
+    chain = [(i, i + 1, 1) for i in range(10)]
+    for _ in _both_partitionings(monkeypatch):
+        assert _sssp(spark, chain, [0], rounds=4) == {i: i for i in range(5)}
+
+
+def test_sssp_relax_32_rounds_match_dijkstra(spark):
+    """32 unrolled rounds from two sources: a random weighted digraph,
+    plus a chain whose far end is 31 edges from source 0."""
+    rng = np.random.default_rng(7)
+    edges = [
+        (int(s), int(d), int(w))
+        for s, d, w in zip(
+            rng.integers(0, 60, 240), rng.integers(0, 60, 240),
+            rng.integers(1, 10, 240),
+        )
+    ]
+    edges += [(100 + i, 101 + i, 1) for i in range(30)] + [(0, 100, 2)]
+    ref = _dijkstra(edges, [0, 1])
+    assert _sssp(spark, edges, [0, 1], rounds=32) == ref
+
+
+_SSSP_FIXTURE = os.path.join(os.path.dirname(__file__), "..", "perfbench", "sf0.1")
+
+
+def _weighted_sssp_run(spark, group):
+    """Build ``weighted_sssp`` and count it (a perfbench op) under a job
+    group: (the count's DataFrame, the jobs launched)."""
+    import __spark_entry__ as entry
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = entry.queries()["weighted_sssp"](spark, _SSSP_FIXTURE)
+        counted = df.groupBy().count()
+        assert counted.collect()[0][0] > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return counted, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_weighted_sssp_reuses_one_edge_broadcast_in_few_jobs(spark):
+    """The unrolled rounds share one edge broadcast (every other use is a
+    ``ReusedExchange``), and a build plus its count launches at most 9
+    jobs; AQE stage jobs vary by one from run to run, so the median of 3
+    runs is checked. Truncating every round launched 25."""
+    import re
+
+    runs = [_weighted_sssp_run(spark, f"sssp_jobs_{i}") for i in range(3)]
+    plan = runs[-1][0]._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\+- BroadcastExchange ", final)) == 1, final
+    assert len(re.findall(r"\+- ReusedExchange ", final)) == 7, final
+    jobs = sorted(n for _, n in runs)
+    assert jobs[1] <= 9, jobs
 
 
 def test_label_propagation_recovers_planted_blocks(spark):

@@ -969,3 +969,40 @@ def test_geoparsed_pages_matches_arrow_regex_and_kernel(spark):
     assert "https://edge.example/1" not in {g[0] for g in got}
     assert ("https://edge.example/2", 10.5, -20.25) in {g[:1] + g[2:4] for g in got}
     assert got == expected
+
+
+def test_widen_warns_once_per_session_when_its_size_gate_fails(
+    monkeypatch, caplog
+):
+    """A size estimate that raises widens the input (it counts as large)
+    and logs one warning per session, not one per call and not none."""
+    import types
+    import weakref
+
+    from gos2_spark.spark import functions as fn
+
+    monkeypatch.setattr(fn, "_WIDEN_GATE_WARNED", weakref.WeakSet())
+
+    class _NoStats:
+        def queryExecution(self):
+            raise RuntimeError("no stats")
+
+    class _Frame:
+        rdd = types.SimpleNamespace(getNumPartitions=lambda: 1)
+        _jdf = _NoStats()
+
+        def __init__(self, session):
+            self.sparkSession = session
+
+        def repartition(self, n):
+            return ("widened", n)
+
+    class _Session:  # weakly referenceable, like a SparkSession
+        sparkContext = types.SimpleNamespace(defaultParallelism=8)
+
+    sessions = [_Session(), _Session()]
+    with caplog.at_level("WARNING", logger=fn.__name__):
+        got = [fn.widen_to_parallelism(_Frame(s)) for s in sessions * 2]
+    assert got == [("widened", 8)] * 4
+    warned = [r for r in caplog.records if "widen_to_parallelism" in r.message]
+    assert len(warned) == 2

@@ -1,5 +1,6 @@
 """Python-worker fixed cost: engine UDFs drop the worker's zip importers,
-and a TileSet's side frames live in the JVM.
+a TileSet's side frames live in the JVM, and literal tables are
+``LocalRelation``s that no Python worker reads.
 
 PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task; on CPython 3.11/3.12 that re-reads the directory of every
@@ -201,3 +202,58 @@ def test_tileset_side_frames_are_cached(spark):
     assert art["grid"].is_cached
     assert art["cov"].is_cached
     assert tiles.spark_artifacts(spark) is art
+
+
+def test_literal_frames_are_local_relations(spark):
+    from gos2_spark.spark.session import literal_frame
+
+    ddl = "s string, i int, l long, d double, b boolean"
+    rows = [("a", 1, 2, 3.5, True), (None, None, None, None, None)]
+    for data in (rows, []):
+        df = literal_frame(spark, data, ddl)
+        analyzed = df._jdf.queryExecution().analyzed()
+        assert analyzed.getClass().getSimpleName() == "LocalRelation"
+        assert df.schema == spark.createDataFrame(data, ddl).schema
+        assert [tuple(r) for r in df.collect()] == data
+
+
+# (module, enclosing function) allowed to call createDataFrame: the
+# literal-frame helper, and the two TileSet side frames, which are cached
+# in the JVM once per TileSet
+_CREATE_DATAFRAME_OWNERS = {
+    ("gos2_spark/spark/session.py", "literal_frame"),
+    ("gos2_spark/spark/joins.py", "TileSet.covering_df"),
+    ("gos2_spark/spark/joins.py", "TileSet.grid_df"),
+}
+
+
+def _calls_with_owner(tree):
+    """(call node, dotted name of its enclosing class/function scope)."""
+    def walk(node, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                yield from walk(child, scope + [child.name])
+            else:
+                if isinstance(child, ast.Call):
+                    yield child, ".".join(scope)
+                yield from walk(child, scope)
+
+    yield from walk(tree, [])
+
+
+def test_engine_literal_frames_go_through_the_helper():
+    """``createDataFrame`` over Python rows is a Python RDD that runs
+    Python-worker tasks on every execution; engine and registry code
+    builds literal tables with ``literal_frame`` instead."""
+    hits = []
+    for path in _engine_files():
+        rel = path.relative_to(ROOT).as_posix()
+        tree = ast.parse(path.read_text(), filename=rel)
+        for node, owner in _calls_with_owner(tree):
+            if (
+                isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and (rel, owner) not in _CREATE_DATAFRAME_OWNERS
+            ):
+                hits.append(f"{rel}:{node.lineno} in {owner or '<module>'}")
+    assert not hits, "createDataFrame outside literal_frame:\n" + "\n".join(hits)
